@@ -53,7 +53,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_gsheets_spark.functions.text import WHITESPACE_SPLIT
+from duckdb_gsheets_spark.functions import text as T
+from duckdb_gsheets_spark.operators.curation import _doc_tokens
 from duckdb_gsheets_spark.operators.registry import QueryDef
 from duckdb_gsheets_spark.plans.catalog import load_table
 
@@ -73,19 +74,6 @@ CONTAM_N = 5
 BENCH_MOD = 97
 
 
-def _tokens_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, toks, n_tokens) with NULL texts dropped — the shared
-    front end of all three operators. Narrow: projection only."""
-    return (
-        docs.where(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.split(F.trim(F.col("text")), WHITESPACE_SPLIT).alias("toks"),
-        )
-        .withColumn("n_tokens", F.size("toks"))
-    )
-
-
 def doc_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping fixed-size token chunks per document.
 
@@ -99,7 +87,7 @@ def doc_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's pandas canonicalizer can hash it; the chunk text itself
     is one ``array_join`` away for a real packing stage.
     """
-    toks = _tokens_df(load_table(spark, sf_dir, "documents"))
+    toks = _doc_tokens(load_table(spark, sf_dir, "documents"), carry=())
     n_chunks = F.lit(1) + F.expr(
         f"div(greatest(0, n_tokens - {CHUNK_SIZE}) + {CHUNK_STRIDE - 1}, "
         f"{CHUNK_STRIDE})"
@@ -157,7 +145,7 @@ def segment_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-occurrence window (uniform by construction — md5 can't
     skew), one on doc_id for the rollup.
     """
-    toks = _tokens_df(load_table(spark, sf_dir, "documents"))
+    toks = _doc_tokens(load_table(spark, sf_dir, "documents"), carry=())
     n_segs = F.expr(f"div(n_tokens + {SEGMENT_SIZE - 1}, {SEGMENT_SIZE})")
     seg_toks = F.slice(
         F.col("toks"), F.col("seg_id") * SEGMENT_SIZE + 1, SEGMENT_SIZE
@@ -218,6 +206,26 @@ GROUP BY doc_id
 """
 
 
+def contam_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, gram): the md5 of every ``CONTAM_N``-token window of
+    every document long enough to have one — narrow (explode over a
+    position sequence), so the streaming screen runs it per
+    micro-batch."""
+    toks = _doc_tokens(docs, carry=()).where(F.col("n_tokens") >= CONTAM_N)
+    ngram = F.md5(
+        F.array_join(
+            F.slice(F.col("toks"), F.col("pos"), CONTAM_N), " "
+        )
+    )
+    return toks.select(
+        "doc_id",
+        F.explode(
+            F.sequence(F.lit(1), F.col("n_tokens") - (CONTAM_N - 1))
+        ).alias("pos"),
+        "toks",
+    ).select("doc_id", ngram.alias("gram"))
+
+
 def _contam_gram_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -229,21 +237,7 @@ def _contam_gram_frames(
     here would shuffle the FULL corpus gram stream — downstream
     broadcast joins / literal-mask probes filter it first, so only
     matched/flagged rows ever reach an exchange."""
-    toks = _tokens_df(load_table(spark, sf_dir, "documents")).where(
-        F.col("n_tokens") >= CONTAM_N
-    )
-    ngram = F.md5(
-        F.array_join(
-            F.slice(F.col("toks"), F.col("pos"), CONTAM_N), " "
-        )
-    )
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.lit(1), F.col("n_tokens") - (CONTAM_N - 1))
-        ).alias("pos"),
-        "toks",
-    ).select("doc_id", ngram.alias("gram"))
+    grams = contam_grams(load_table(spark, sf_dir, "documents"))
     bench = (
         grams.where(F.col("doc_id") % BENCH_MOD == 0)
         .select(F.col("doc_id").alias("bench_doc"), "gram")
@@ -964,9 +958,9 @@ def duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     internal key while the oracle groups by the passage string
     itself, and the two stay winner-for-winner identical.
     """
-    toks = _tokens_df(load_table(spark, sf_dir, "documents")).where(
-        F.col("n_tokens") >= PASSAGE_N
-    )
+    toks = _doc_tokens(
+        load_table(spark, sf_dir, "documents"), carry=()
+    ).where(F.col("n_tokens") >= PASSAGE_N)
     gram_arr = F.slice(F.col("toks"), F.col("pos"), PASSAGE_N)
     grams = toks.select(
         "doc_id",
@@ -1021,7 +1015,7 @@ def duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
             F.array_join(
                 F.slice(
-                    F.split(F.trim(F.col("text")), WHITESPACE_SPLIT),
+                    T.tokens(F.col("text")),
                     F.col("first_pos").cast("int"),
                     PASSAGE_N,
                 ),
@@ -1068,7 +1062,7 @@ def boilerplate_segment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup on doc_id. Output is one row per document regardless of
     corpus size.
     """
-    toks = _tokens_df(load_table(spark, sf_dir, "documents"))
+    toks = _doc_tokens(load_table(spark, sf_dir, "documents"), carry=())
     n_segs = F.expr(f"div(n_tokens + {BOILER_SEG_SIZE - 1}, {BOILER_SEG_SIZE})")
     seg_toks = F.slice(
         F.col("toks"), F.col("seg_id") * BOILER_SEG_SIZE + 1, BOILER_SEG_SIZE

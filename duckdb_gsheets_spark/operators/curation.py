@@ -36,7 +36,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_gsheets_spark.functions import text as T
-from duckdb_gsheets_spark.functions.text import WHITESPACE_SPLIT
 from duckdb_gsheets_spark.operators.registry import QueryDef
 from duckdb_gsheets_spark.plans.catalog import load_table
 
@@ -53,16 +52,15 @@ BM25_TERMS = ("data", "spark", "query")
 BM25_TOPK = 20
 
 
-def _doc_tokens(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, source, toks, n_tokens), NULL texts dropped."""
+def _doc_tokens(
+    docs: DataFrame, carry: tuple[str, ...] = ("lang", "source")
+) -> DataFrame:
+    """(doc_id, *carry, toks, n_tokens), NULL texts dropped — the one
+    whitespace-token front end of the curation, chunking and pipeline
+    families and their streaming twins. Narrow: projection only."""
     return (
         docs.where(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            F.split(F.trim(F.col("text")), WHITESPACE_SPLIT).alias("toks"),
-        )
+        .select("doc_id", *carry, T.tokens(F.col("text")).alias("toks"))
         .withColumn("n_tokens", F.size("toks"))
     )
 
@@ -578,6 +576,22 @@ def frequency_vocab(toks: DataFrame) -> DataFrame:
     )
 
 
+def _lang_tokens(docs: DataFrame) -> DataFrame:
+    """(lang, tok): one row per whitespace token, NULL texts dropped."""
+    return _doc_tokens(docs).select("lang", F.explode("toks").alias("tok"))
+
+
+def oov_flags(toks: DataFrame, vocab_toks: DataFrame) -> DataFrame:
+    """``toks`` left-joined to the broadcast :func:`frequency_vocab` of
+    ``vocab_toks``: ``in_vocab`` is 1 for covered tokens, NULL for
+    OOV. The kernel of :func:`vocab_oov_rate` and its streaming twin
+    (which fits the vocab from the static corpus)."""
+    vocab = frequency_vocab(vocab_toks).select(
+        "tok", F.lit(1).alias("in_vocab")
+    )
+    return toks.join(F.broadcast(vocab), "tok", "left")
+
+
 def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language out-of-vocabulary rate against a frequency-built
     vocabulary (the corpus's ``VOCAB_TOP`` most frequent tokens, count
@@ -591,10 +605,8 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a tokenizer vocab is ≤100k entries by construction), LEFT join
     from the postings, per-language rollup.
     """
-    docs = _doc_tokens(load_table(spark, sf_dir, "documents"))
-    toks = docs.select("lang", F.explode("toks").alias("tok"))
-    vocab = frequency_vocab(toks).select("tok", F.lit(1).alias("in_vocab"))
-    joined = toks.join(F.broadcast(vocab), "tok", "left")
+    toks = _lang_tokens(load_table(spark, sf_dir, "documents"))
+    joined = oov_flags(toks, toks)
     return joined.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0)).alias(
@@ -1160,6 +1172,16 @@ def resample_keep_cond() -> Column:
     )
 
 
+def resample_kept(docs: DataFrame, thresholds: DataFrame) -> DataFrame:
+    """The survivors of the keep filter: ``docs`` (doc_id, lang, ...)
+    joined to the broadcast |languages|-row ``thresholds`` table and
+    filtered by :func:`resample_keep_cond` — narrow on the docs side,
+    so the streaming twin runs it per micro-batch."""
+    return docs.join(F.broadcast(thresholds), "lang").where(
+        resample_keep_cond()
+    )
+
+
 def corpus_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic language-rebalancing resample: each language is
     down-sampled toward an equal share of the token budget
@@ -1184,10 +1206,7 @@ def corpus_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(lang) rollup of survivors.
     """
     docs = _doc_tokens(load_table(spark, sf_dir, "documents"))
-    thresholds = resample_thresholds(docs)
-    kept = docs.join(F.broadcast(thresholds), "lang").where(
-        resample_keep_cond()
-    )
+    kept = resample_kept(docs, resample_thresholds(docs))
     return (
         kept.groupBy("lang", "n_docs_in", "lang_tokens", "threshold")
         .agg(
@@ -1259,9 +1278,7 @@ def dataset_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        F.size(F.split(F.trim(F.col("text")), WHITESPACE_SPLIT)).alias(
-            "n_tokens"
-        ),
+        T.token_count(F.col("text")).alias("n_tokens"),
         F.length("text").alias("n_chars"),
         F.round(T.quality_score(F.col("text")) * 1e6).cast("long").alias(
             "q_s"
@@ -2336,22 +2353,7 @@ def _dsir_weights(docs: DataFrame, raw_excludes_target: bool = False) -> DataFra
     (guide §2.4; the exact integer sum is unchanged: same per-bucket
     longs, integer addition in any order).
     """
-    from duckdb_gsheets_spark.functions import portable_hash as PH
-
-    feats = (
-        _doc_tokens(docs)
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            "n_tokens",
-            F.transform(
-                dsir_feat_array(),
-                lambda f: PH.tok_hash60(f) % DSIR_BUCKETS,
-            ).alias("barr"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    feats = _dsir_bucket_rows(docs).localCheckpoint(eager=True)
     exploded = feats.select("source", F.explode("barr").alias("bucket"))
     llr = dsir_bucket_llr(exploded, raw_excludes_target=raw_excludes_target)
     # The llr frame is a LOCAL relation (the tally was already
@@ -2361,23 +2363,64 @@ def _dsir_weights(docs: DataFrame, raw_excludes_target: bool = False) -> DataFra
     # buckets keep 0: every scorable feature maps to an observed
     # bucket by construction (the scored slice IS the fitting corpus),
     # so the slot is never read — it only keeps the array dense.
-    lut_vals = [0] * DSIR_BUCKETS
-    for r in llr.collect():
-        lut_vals[int(r.bucket)] = int(r.llr)
-    lut = F.expr(
-        "array(" + ",".join(f"{v}L" for v in lut_vals) + ")"
+    return _dsir_score(
+        feats, {int(r.bucket): int(r.llr) for r in llr.collect()}
     )
+
+
+def _dsir_bucket_rows(docs: DataFrame) -> DataFrame:
+    """``(doc_id, lang, source, n_tokens, barr)``: each document's DSIR
+    feature stream hashed to its bucket ARRAY — the per-row input of
+    :func:`_dsir_score`, NULL texts dropped."""
+    return _doc_tokens(docs).select(
+        "doc_id",
+        "lang",
+        "source",
+        "n_tokens",
+        dsir_bucket_array().alias("barr"),
+    )
+
+
+def _dsir_score(feats: DataFrame, llr: dict[int, int]) -> DataFrame:
+    """Score a :func:`_dsir_bucket_rows` frame against the fitted
+    ``bucket → llr`` table: ``(doc_id, lang, source, n_tokens,
+    n_feats, w_scaled)``. A projection, no shuffle and no join, so
+    the batch weights and the streaming scorer share it."""
     return feats.select(
         "doc_id",
         "lang",
         "source",
         "n_tokens",
         F.size("barr").cast("long").alias("n_feats"),
-        F.aggregate(
-            "barr",
-            F.lit(0).cast("long"),
-            lambda acc, b: acc + F.element_at(lut, (b + 1).cast("int")),
-        ).alias("w_scaled"),
+        bucket_lut_sum("barr", llr).alias("w_scaled"),
+    )
+
+
+def bucket_lut_sum(barr, weights: dict[int, int]) -> Column:
+    """``Σ weights[b]`` over a bucket array, as one JVM ``aggregate``
+    over a dense ``DSIR_BUCKETS``-long array literal (absent buckets
+    weigh 0) — the fitted-artifact-as-literal fold shared by the DSIR
+    weights and the classifier gate's per-row scorer."""
+    lut_vals = [0] * DSIR_BUCKETS
+    for b, v in weights.items():
+        if b >= 0:
+            lut_vals[b] = v
+    lut = F.expr(
+        "array(" + ",".join(f"{v}L" for v in lut_vals) + ")"
+    )
+    return F.aggregate(
+        barr,
+        F.lit(0).cast("long"),
+        lambda acc, b: acc + F.element_at(lut, (b + 1).cast("int")),
+    )
+
+
+def dsir_bucket_array() -> Column:
+    """Column expression: :func:`dsir_feat_array` hashed to buckets."""
+    from duckdb_gsheets_spark.functions import portable_hash as PH
+
+    return F.transform(
+        dsir_feat_array(), lambda f: PH.tok_hash60(f) % DSIR_BUCKETS
     )
 
 
@@ -2385,9 +2428,10 @@ def dsir_feat_array():
     """Column expression: the DSIR hashed-feature stream of a tokenized
     document row (``toks`` column) as ONE array — unigrams ⧺ adjacent
     bigrams, multiplicity preserved. Shared by the batch explode path
-    (:func:`_dsir_feats`) and the per-row streaming scorer
-    (streaming.events_stream.streaming_dsir_weight_counts), so the
-    feature definition cannot drift between the two."""
+    (:func:`_dsir_feats`) and the per-row bucket array
+    (:func:`dsir_bucket_array`) the weights, the classifier gate and
+    their streaming scorers fold, so the feature definition cannot
+    drift between them."""
     n_bi = F.size("toks") - 1  # ≥ 0: split() yields ≥ 1 token
     return F.concat(
         F.col("toks"),
@@ -2440,7 +2484,7 @@ def dsir_bucket_llr(
     # checkpoint would only move the failure to the totals fold. The
     # streaming DSIR scorer is unaffected by design: it fits this
     # artifact ONCE from its STATIC corpus and collects the ≤
-    # DSIR_BUCKETS rows into a map literal (dsir_row_scorer), which
+    # DSIR_BUCKETS rows into an array literal (dsir_row_scorer), which
     # is how a production gate consumes a fitted artifact anyway.
     if feats.isStreaming:
         raise ValueError(

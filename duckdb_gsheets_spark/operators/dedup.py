@@ -2106,7 +2106,7 @@ def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.where(F.col("text").isNotNull()).select(
         "doc_id",
         "lang",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
+        T.token_count(F.col("text")).alias("n_tokens"),
     )
     labels = _minhash_cluster_labels(docs)
     kept = F.col("doc_id") == F.col("comp")
@@ -2803,6 +2803,78 @@ FROM gs_nodes, gs_t, gs_m
 DELTA_SOURCE = "src19"
 
 
+def incremental_hits(
+    batch: DataFrame, corpus: DataFrame, hint=F.broadcast
+) -> DataFrame:
+    """``(doc_id, is_exact, c_id)``: every exact (fingerprint) and
+    near (LSH band probe + shingle Jaccard) match of a ``batch``
+    document against the ``corpus`` index — the probe kernel of
+    :func:`dedup_incremental_batch` and its streaming twin. ``hint``
+    wraps the delta-bounded sides (a broadcast in batch; the stream
+    passes the identity, a stream side cannot be broadcast)."""
+    b_fp = batch.select(
+        "doc_id", T.fingerprint(F.col("text")).alias("fp")
+    )
+    c_fp = corpus.select(
+        T.fingerprint(F.col("text")).alias("fp"),
+        F.col("doc_id").alias("c_id"),
+    )
+    exact_hits = (
+        hint(b_fp)
+        .join(c_fp, "fp")
+        .select("doc_id", F.lit(1).alias("is_exact"), "c_id")
+    )
+    sigs_b = minhash_signatures(batch)
+    sigs_c = minhash_signatures(corpus)
+    # The delta's shingles RIDE the band-row broadcast (carry=, the
+    # streaming twin's device) instead of a second delta broadcast +
+    # re-join: round-14 job-floor decomposition read this row at 15
+    # jobs / 100% scheduling floor, and each distinct broadcast frame
+    # is one job — one candidate dropDuplicates per (b_id, c_id) pair
+    # replaces the old band-distinct + shingle-attach chain (sh_a is
+    # functionally dependent on b_id, so any survivor carries the
+    # right array).
+    cand_sh = (
+        hint(
+            _band_rows(sigs_b, carry=("shingles",)).withColumnsRenamed(
+                {"doc_id": "b_id", "shingles": "sh_a"}
+            )
+        )
+        .join(
+            _band_rows(sigs_c).withColumnRenamed("doc_id", "c_id"),
+            ["band_idx", "band_hash"],
+        )
+        .select("b_id", "c_id", "sh_a")
+        .dropDuplicates(["b_id", "c_id"])
+    )
+    jaccard = F.round(
+        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+        / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
+        6,
+    )
+    near_hits = (
+        # The corpus-shingle join broadcasts the delta-bounded
+        # candidate side, so the corpus signature stream never
+        # hash-exchanges — the explicit hint pins the O(delta) plan
+        # even when AQE stats would otherwise pick a corpus shuffle.
+        hint(cand_sh)
+        .join(
+            sigs_c.select(
+                F.col("doc_id").alias("c_id"),
+                F.col("shingles").alias("sh_b"),
+            ),
+            "c_id",
+        )
+        .where(jaccard >= MINHASH_JACCARD_THRESHOLD)
+        .select(
+            F.col("b_id").alias("doc_id"),
+            F.lit(0).alias("is_exact"),
+            "c_id",
+        )
+    )
+    return exact_hits.unionByName(near_hits)
+
+
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup a NEW ingest batch against the existing corpus — the
     shape a 100 TB pipeline actually runs daily. Re-deduping the whole
@@ -2832,72 +2904,12 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.where(F.col("source") == DELTA_SOURCE)
     corpus = docs.where(F.col("source") != DELTA_SOURCE)
-    b_fp = batch.select(
-        "doc_id", T.fingerprint(F.col("text")).alias("fp")
-    )
-    c_fp = corpus.select(
-        T.fingerprint(F.col("text")).alias("fp"),
-        F.col("doc_id").alias("c_id"),
-    )
-    exact_hits = (
-        F.broadcast(b_fp)
-        .join(c_fp, "fp")
-        .select("doc_id", F.lit(1).alias("is_exact"), "c_id")
-    )
-    sigs_b = minhash_signatures(batch)
-    sigs_c = minhash_signatures(corpus)
-    # The delta's shingles RIDE the band-row broadcast (carry=, the
-    # streaming twin's device) instead of a second delta broadcast +
-    # re-join: round-14 job-floor decomposition read this row at 15
-    # jobs / 100% scheduling floor, and each distinct broadcast frame
-    # is one job — one candidate dropDuplicates per (b_id, c_id) pair
-    # replaces the old band-distinct + shingle-attach chain (sh_a is
-    # functionally dependent on b_id, so any survivor carries the
-    # right array).
-    cand_sh = (
-        F.broadcast(
-            _band_rows(sigs_b, carry=("shingles",)).withColumnsRenamed(
-                {"doc_id": "b_id", "shingles": "sh_a"}
-            )
-        )
-        .join(
-            _band_rows(sigs_c).withColumnRenamed("doc_id", "c_id"),
-            ["band_idx", "band_hash"],
-        )
-        .select("b_id", "c_id", "sh_a")
-        .dropDuplicates(["b_id", "c_id"])
-    )
-    jaccard = F.round(
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-        6,
-    )
-    near_hits = (
-        # The corpus-shingle join broadcasts the delta-bounded
-        # candidate side, so the corpus signature stream never
-        # hash-exchanges — the explicit hint pins the O(delta) plan
-        # even when AQE stats would otherwise pick a corpus shuffle.
-        F.broadcast(cand_sh)
-        .join(
-            sigs_c.select(
-                F.col("doc_id").alias("c_id"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "c_id",
-        )
-        .where(jaccard >= MINHASH_JACCARD_THRESHOLD)
-        .select(
-            F.col("b_id").alias("doc_id"),
-            F.lit(0).alias("is_exact"),
-            "c_id",
-        )
-    )
     # ONE fused rollup + ONE broadcast for the verdict assembly: the
     # exact and near hit streams union before the delta-keyed
     # aggregate, halving the probe-side broadcast-exchange jobs the
     # floor table charged to the old two-rollup shape.
     hits = (
-        exact_hits.unionByName(near_hits)
+        incremental_hits(batch, corpus)
         .groupBy("doc_id")
         .agg(
             F.sum("is_exact").alias("n_exact"),
@@ -3172,7 +3184,7 @@ def dedup_upweight_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.when(
             F.col("text").isNotNull(),
-            F.size(F.split(F.trim(F.col("text")), r"\s+")),
+            T.token_count(F.col("text")),
         )
         .otherwise(0)
         .alias("rep_tokens"),
@@ -4074,6 +4086,29 @@ FROM pa_docs d LEFT JOIN pa_agg a USING (doc_id)
 
 
 
+def quality_scored(docs: DataFrame, *carry: str) -> DataFrame:
+    """``(doc_id, *carry, fp, qm)`` per non-NULL text: the exact-dup
+    fingerprint and the quality score on the scaled-long micro grid."""
+    return docs.where(F.col("text").isNotNull()).select(
+        "doc_id",
+        *carry,
+        T.fingerprint(F.col("text")).alias("fp"),
+        F.round(T.quality_score(F.col("text")) * 1e6)
+        .cast("long")
+        .alias("qm"),
+    )
+
+
+def quality_elect(scored: DataFrame) -> DataFrame:
+    """The survivor election over a :func:`quality_scored` frame: ``rk``
+    is each row's rank in its fingerprint group under the total order
+    (qm desc, doc_id asc), so ``rk = 1`` is the elected copy. Shared
+    by :func:`dedup_quality_survivor` and the streaming survivor gate's
+    incumbent index."""
+    w = Window.partitionBy("fp").orderBy(F.desc("qm"), "doc_id")
+    return scored.withColumn("rk", F.row_number().over(w))
+
+
 def dedup_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUALITY-AWARE dedup survivor selection — the FineWeb/RefinedWeb
     upgrade over keep-lowest-doc_id: within each exact-duplicate
@@ -4093,19 +4128,9 @@ def dedup_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro grid makes the ordering and the means exact in both
     engines.
     """
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull()
+    ranked = quality_elect(
+        quality_scored(load_table(spark, sf_dir, "documents"), "source")
     )
-    scored = docs.select(
-        "doc_id",
-        "source",
-        T.fingerprint(F.col("text")).alias("fp"),
-        F.round(T.quality_score(F.col("text")) * 1e6)
-        .cast("long")
-        .alias("qm"),
-    )
-    w = Window.partitionBy("fp").orderBy(F.desc("qm"), "doc_id")
-    ranked = scored.withColumn("rk", F.row_number().over(w))
     kept = F.when(F.col("rk") == 1, 1).otherwise(0)
     dropped = F.when(F.col("rk") > 1, 1).otherwise(0)
     return (

@@ -1321,6 +1321,20 @@ GROUP BY 1, 2
 """
 
 
+def active_user_contrib(user_days: DataFrame) -> DataFrame:
+    """``(user_id, off, target)``: each distinct (user_id, day) row
+    exploded into the ``MAU_WINDOW`` target days it counts toward
+    (narrow) — the contribution kernel of :func:`events_active_users`
+    and its streaming twin."""
+    return user_days.select(
+        "user_id",
+        F.explode(F.sequence(F.lit(0), F.lit(MAU_WINDOW - 1))).alias("off"),
+        "day",
+    ).select(
+        "user_id", "off", F.date_add(F.col("day"), F.col("off")).alias("target")
+    )
+
+
 def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU / WAU / MAU: per calendar day, the count of distinct users
     active that day, in the trailing 7 days, and in the trailing 28
@@ -1341,13 +1355,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.to_date("ts").alias("day")
     ).distinct()
     days = user_days.select("day").distinct()
-    contrib = user_days.select(
-        "user_id",
-        F.explode(F.sequence(F.lit(0), F.lit(MAU_WINDOW - 1))).alias("off"),
-        "day",
-    ).select(
-        "user_id", "off", F.date_add(F.col("day"), F.col("off")).alias("target")
-    )
+    contrib = active_user_contrib(user_days)
     return (
         contrib.join(
             F.broadcast(days.withColumnRenamed("day", "target")), "target"
@@ -1621,8 +1629,16 @@ def events_conversion_lag_quantiles(
     self-join); quantiles are the exact interpolated order statistics
     (sketchable at 100 TB, see events_value_quantiles).
     """
-    events = load_table(spark, sf_dir, "events")
-    firsts = events.groupBy("user_id").agg(
+    return conversion_lag_summary(
+        first_view_purchase(load_table(spark, sf_dir, "events"))
+    )
+
+
+def first_view_purchase(events: DataFrame) -> DataFrame:
+    """``(user_id, v, p)``: each user's first view and first purchase
+    time — one conditional-min aggregation, so the live monitor keeps
+    it as its only streaming state."""
+    return events.groupBy("user_id").agg(
         F.min(
             F.when(F.col("event_type") == "view", F.col("ts"))
         ).alias("v"),
@@ -1630,6 +1646,12 @@ def events_conversion_lag_quantiles(
             F.when(F.col("event_type") == "purchase", F.col("ts"))
         ).alias("p"),
     )
+
+
+def conversion_lag_summary(firsts: DataFrame) -> DataFrame:
+    """Count and exact p50/p90/p99 (seconds) of the view → purchase
+    lag over a :func:`first_view_purchase` frame, for users whose
+    first purchase does not precede their first view."""
     us = _epoch_us
     lags = firsts.where(
         F.col("v").isNotNull()
@@ -2216,6 +2238,15 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_anonymity_bands(load_table(spark, sf_dir, "events"))
 
 
+def k_anon_band() -> Column:
+    """The risk band of a QI group from its distinct-user count ``nu``."""
+    return (
+        F.when(F.col("nu") >= K_ANON, F.lit(f"k_ge_{K_ANON}"))
+        .when(F.col("nu") >= 2, F.lit(f"k_2_{K_ANON - 1}"))
+        .otherwise(F.lit("k_1"))
+    )
+
+
 def k_anonymity_bands(events: DataFrame) -> DataFrame:
     """The banding core over any ``(ts, event_type, user_id)`` frame
     (the pytest drives the k≥K band through a synthetic frame when the
@@ -2228,12 +2259,7 @@ def k_anonymity_bands(events: DataFrame) -> DataFrame:
         F.countDistinct("user_id").alias("nu"),
         F.count(F.lit(1)).alias("ne"),
     )
-    band = (
-        F.when(F.col("nu") >= K_ANON, F.lit(f"k_ge_{K_ANON}"))
-        .when(F.col("nu") >= 2, F.lit(f"k_2_{K_ANON - 1}"))
-        .otherwise(F.lit("k_1"))
-    )
-    banded = groups.groupBy(band.alias("band")).agg(
+    banded = groups.groupBy(k_anon_band().alias("band")).agg(
         F.count(F.lit(1)).alias("n_groups"),
         F.sum(F.col("ne").cast("long")).alias("n_events"),
         F.sum(F.col("nu").cast("long")).alias("user_slots"),
@@ -2311,6 +2337,28 @@ GROUP BY GROUPING SETS ((day, event_type), (day), (event_type))
 """
 
 
+def ab_arm_stats(events: DataFrame) -> DataFrame:
+    """``(arm, n, sx, sxx)``: per-arm count, Σx and Σx² of purchase
+    values on the cents grid as exact DECIMAL(38,0) integers — the
+    sufficient statistics of the Welch z, shared by the readout, the
+    power analysis and the live monitor. Arm = md5(user_id) low hex
+    digit parity."""
+    cents = F.round(F.col("value") * F.lit(100.0)).cast("long")
+    last_hex = F.substring(F.md5(F.col("user_id").cast("string")), 32, 1)
+    arm = F.when(
+        last_hex.isin("0", "2", "4", "6", "8", "a", "c", "e"), "A"
+    ).otherwise("B")
+    pts = events.where(F.col("event_type") == "purchase").select(
+        arm.alias("arm"), cents.alias("x")
+    )
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — exact widening
+    return pts.groupBy("arm").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(dec(F.col("x"))).alias("sx"),
+        F.sum(dec(F.col("x") * F.col("x"))).alias("sxx"),
+    )
+
+
 def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment readout: hash-bucket A/B assignment (md5(user_id)
     low hex digit parity — every event of a user lands in one arm,
@@ -2328,21 +2376,7 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan + ONE 2-row map-side-combined rollup; nothing corpus-sized
     moves — at 100 TB this is a pure scan-side fold.
     """
-    events = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("long")
-    last_hex = F.substring(F.md5(F.col("user_id").cast("string")), 32, 1)
-    arm = F.when(
-        last_hex.isin("0", "2", "4", "6", "8", "a", "c", "e"), "A"
-    ).otherwise("B")
-    pts = events.where(F.col("event_type") == "purchase").select(
-        arm.alias("arm"), cents.alias("x")
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — exact widening
-    per_arm = pts.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("x") * F.col("x"))).alias("sxx"),
-    )
+    per_arm = ab_arm_stats(load_table(spark, sf_dir, "events"))
     a = per_arm.where(F.col("arm") == "A").select(
         F.col("n").alias("n_a"), F.col("sx").alias("sx_a"),
         F.col("sxx").alias("sxx_a"),
@@ -2398,21 +2432,7 @@ def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed double expression over the exact DECIMAL co-moments; same
     shapes as the readout: one scan-side fold to a 2-row stat table.
     """
-    events = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("long")
-    last_hex = F.substring(F.md5(F.col("user_id").cast("string")), 32, 1)
-    arm = F.when(
-        last_hex.isin("0", "2", "4", "6", "8", "a", "c", "e"), "A"
-    ).otherwise("B")
-    pts = events.where(F.col("event_type") == "purchase").select(
-        arm.alias("arm"), cents.alias("x")
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — exact widening
-    per_arm = pts.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("x") * F.col("x"))).alias("sxx"),
-    )
+    per_arm = ab_arm_stats(load_table(spark, sf_dir, "events"))
     a = per_arm.where(F.col("arm") == "A").select(
         F.col("n").alias("n_a"), F.col("sx").alias("sx_a"),
         F.col("sxx").alias("sxx_a"),

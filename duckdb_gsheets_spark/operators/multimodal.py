@@ -868,6 +868,26 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _phash_pairs(phash_signatures(spark, sf_dir))
 
 
+def phash_band_rows(frame: DataFrame, sig_col: str) -> DataFrame:
+    """``frame`` exploded to one row per LSH band of its ``sig_col``
+    signature: every input column plus ``band_idx``, ``band_val``.
+    Narrow, so the streaming perceptual gate bands arrivals with it."""
+    return frame.select(
+        *frame.columns,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_idx"),
+                        _pband_val(F.col(sig_col), b).alias("band_val"),
+                    )
+                    for b in range(PHASH_BANDS)
+                ]
+            )
+        ).alias("band"),
+    ).select(*frame.columns, "band.band_idx", "band.band_val")
+
+
 def _phash_close_sig_pairs(sigs: DataFrame) -> DataFrame:
     """Banded LSH candidates over DISTINCT (format, sig) rows with
     first-matching-band exactly-once emission, Hamming-verified to
@@ -875,22 +895,7 @@ def _phash_close_sig_pairs(sigs: DataFrame) -> DataFrame:
     PHASH_MAX_HAMMING. Shared by the pair query (which fans doc pairs
     back out) and the cluster labeling (which keeps the collapsed
     sig-level edges — never quadratic in copy count)."""
-    distinct_sigs = sigs.select("format", "sig").distinct()
-    bands = distinct_sigs.select(
-        "format",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        _pband_val(F.col("sig"), b).alias("band_val"),
-                    )
-                    for b in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("format", "sig", "band.band_idx", "band.band_val")
+    bands = phash_band_rows(sigs.select("format", "sig").distinct(), "sig")
     no_earlier_match = F.lit(True)
     for b in range(1, PHASH_BANDS):
         earlier_differs = F.lit(True)

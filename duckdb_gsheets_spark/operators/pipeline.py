@@ -99,7 +99,7 @@ def pipeline_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     |lang|-row rollup — the corpus itself shuffles once.
     """
     from duckdb_gsheets_spark.operators.curation import (
-        resample_keep_cond,
+        resample_kept,
         resample_thresholds,
     )
     from duckdb_gsheets_spark.operators.text import gopher_rules
@@ -132,10 +132,7 @@ def pipeline_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.n_toks").alias("n_tokens"),
         )
     )
-    thresholds = resample_thresholds(survivors)
-    kept = survivors.join(F.broadcast(thresholds), "lang").where(
-        resample_keep_cond()
-    )
+    kept = resample_kept(survivors, resample_thresholds(survivors))
     return (
         kept.groupBy("lang", "n_docs_in", "threshold")
         .agg(
@@ -531,7 +528,7 @@ def pipeline_split_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         split_col().alias("split"),
         T.fingerprint(F.col("text")).alias("fp"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
+        T.token_count(F.col("text")).alias("n_tokens"),
     )
     # Single fp partition serves both flags: ordering by (split,
     # doc_id) makes each (fp, split) group CONTIGUOUS, so "duplicate
@@ -1492,9 +1489,17 @@ def pipeline_classifier_gate(
     meta = _doc_tokens(docs).select(
         "doc_id", "source", F.col("n_tokens").cast("long").alias("n_tokens")
     )
-    verdicts = (
-        meta.join(scored, "doc_id")
-        .withColumn(
+    verdicts = classifier_verdicts(meta.join(scored, "doc_id"))
+    return classifier_ledger(verdicts).orderBy("source")
+
+
+def classifier_verdicts(scored: DataFrame) -> DataFrame:
+    """Add the deterministic Pareto draw (``ph32``, ``draw_micro``) and
+    the keep verdict ``score_micro + draw_micro > 1e6`` to a frame
+    carrying ``doc_id`` and ``score_micro`` — a row projection, shared
+    by :func:`pipeline_classifier_gate` and the streaming scorer."""
+    return (
+        scored.withColumn(
             "ph32",
             F.conv(
                 F.substring(
@@ -1515,6 +1520,12 @@ def pipeline_classifier_gate(
             "kept", F.col("score_micro") + F.col("draw_micro") > 1000000
         )
     )
+
+
+def classifier_ledger(verdicts: DataFrame) -> DataFrame:
+    """The per-source gate ledger over a :func:`classifier_verdicts`
+    frame: docs seen / kept, tokens kept, exact micro-mean score of
+    all vs kept rows (zero-kept sources read an explicit 0)."""
     return (
         verdicts.groupBy("source")
         .agg(
@@ -1539,7 +1550,6 @@ def pipeline_classifier_gate(
                 "ELSE CAST(0 AS BIGINT) END"
             ).alias("kept_score_micro"),
         )
-        .orderBy("source")
     )
 
 
@@ -1841,6 +1851,32 @@ GROUP BY lang
 C4_MIN_TOKENS = 25
 
 
+def fineweb_staged(docs: DataFrame) -> DataFrame:
+    """``(doc_id, source, n_tokens, q_pass, c4_pass, fp)`` per non-NULL
+    text: the FineWeb funnel's stateless stage-1/2 flags (Gopher
+    quality, C4 length + blacklist) and the dedup fingerprint — one
+    row projection shared by :func:`pipeline_fineweb_corpus` and the
+    streaming intake gate."""
+    from duckdb_gsheets_spark.operators.text import gopher_rules
+
+    docs = docs.where(F.col("text").isNotNull())
+    c = F.col("text")
+    c4_pass = (
+        (F.col("n_tokens") >= C4_MIN_TOKENS)
+        & ~c.contains("{")
+        & ~c.contains("}")
+        & ~F.lower(c).contains("lorem ipsum")
+    )
+    return gopher_rules(docs, carry=("source", "text")).select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        F.col("passes").alias("q_pass"),
+        c4_pass.cast("int").alias("c4_pass"),
+        T.fingerprint(c).alias("fp"),
+    )
+
+
 def pipeline_fineweb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FineWeb-style staged filtering funnel (Penedo et al., 2024),
     composed end to end with a per-stage ATTRITION ledger: Gopher
@@ -1873,26 +1909,7 @@ def pipeline_fineweb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is |sources| rows. Two shuffles total plus the final
     |sources|-row agg — same ledger class as the CCNet gate.
     """
-    from duckdb_gsheets_spark.operators.text import gopher_rules
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull()
-    )
-    c = F.col("text")
-    c4_pass = (
-        (F.col("n_tokens") >= C4_MIN_TOKENS)
-        & ~c.contains("{")
-        & ~c.contains("}")
-        & ~F.lower(c).contains("lorem ipsum")
-    )
-    staged = gopher_rules(docs, carry=("source", "text")).select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.col("passes").alias("q_pass"),
-        c4_pass.cast("int").alias("c4_pass"),
-        T.fingerprint(c).alias("fp"),
-    )
+    staged = fineweb_staged(load_table(spark, sf_dir, "documents"))
     surv = F.col("q_pass") * F.col("c4_pass")
     # Canonical-doc election as ONE fp-partitioned window min instead
     # of the round-13 groupBy + join-back (which re-executed the

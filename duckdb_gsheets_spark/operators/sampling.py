@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_gsheets_spark.functions import text as T
 from duckdb_gsheets_spark.operators.registry import QueryDef
 from duckdb_gsheets_spark.plans.catalog import load_table
 
@@ -210,8 +211,6 @@ def sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``TakeOrderedAndProject`` (per-partition k-row heaps — no global
     sort), identical shape to :func:`sample_bottom_k`.
     """
-    from duckdb_gsheets_spark.functions import text as T
-
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
@@ -252,8 +251,6 @@ LIMIT {WEIGHTED_K}
 
 
 def _weighted_oracle() -> str:
-    from duckdb_gsheets_spark.functions import text as T
-
     return SAMPLE_WEIGHTED_ORACLE.replace("{q}", T.oracle_quality_score())
 
 
@@ -302,7 +299,7 @@ def sample_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (e.g. near-dups straddling train/test) have a stable target.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = T.token_count(F.col("text"))
     return (
         docs.where(F.col("text").isNotNull())
         .select("lang", split_col().alias("split"), toks.alias("n_tokens"))

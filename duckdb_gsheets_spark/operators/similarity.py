@@ -677,6 +677,28 @@ def _pq_codebook(code_rows: list) -> tuple:
     return Csub, cc, sub
 
 
+def _pq_encode(M: np.ndarray, Csub, cc, sub) -> np.ndarray:
+    """PQ codes of the rows of ``M``: per-subspace argmax of
+    round6(x·c − ‖c‖²/2), ties to the smallest codeword index (argmax
+    is first-occurrence). Shared by the PQ, IVF-PQ and streaming
+    IVF-PQ index builds."""
+    codes = np.empty((len(M), PQ_M), dtype=np.int64)
+    for s in range(PQ_M):
+        ascore = np.round(
+            M[:, s * sub : (s + 1) * sub] @ Csub[s].T - 0.5 * cc[s], 6
+        )
+        codes[:, s] = ascore.argmax(axis=1)
+    return codes
+
+
+def _coarse_lists(M: np.ndarray, unit: np.ndarray, id_arr) -> np.ndarray:
+    """IVF list id of each row of ``M``: round-6 cosine against the
+    unit centroids, first-occurrence argmax."""
+    norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+    s = np.round((M @ unit.T) / norms[:, None], 6)
+    return id_arr[s.argmax(axis=1)]
+
+
 def _ivf_topk_frame(
     spark: SparkSession,
     sf_dir: str,
@@ -1449,15 +1471,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             M = np.stack(pdf["emb"].to_numpy())
             vec_ids = pdf["vec_id"].to_numpy()
-            # Encode: per-subspace argmax of round6(x·c - ||c||²/2),
-            # ties to the smallest codeword index (argmax is
-            # first-occurrence).
-            codes = np.empty((len(M), PQ_M), dtype=np.int64)
-            for s in range(PQ_M):
-                ascore = np.round(
-                    M[:, s * sub : (s + 1) * sub] @ Csub[s].T - 0.5 * cc[s], 6
-                )
-                codes[:, s] = ascore.argmax(axis=1)
+            codes = _pq_encode(M, Csub, cc, sub)
             # ADC: adc[q, b] = Σ_s lut[s, q, codes[b, s]]
             adc = np.zeros((len(qids), len(M)))
             rec2 = np.zeros(len(M))
@@ -2672,23 +2686,14 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             M = np.stack(pdf["emb"].to_numpy())
             vec_ids = pdf["vec_id"].to_numpy()
-            norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-            s = np.round((M @ unit.T) / norms[:, None], 6)
-            lists = id_arr[s.argmax(axis=1)]
+            lists = _coarse_lists(M, unit, id_arr)
             outs = []
             for lid in np.unique(lists):
                 if lid not in by_list:
                     continue
                 mask = lists == lid
                 Mm = M[mask]
-                codes = np.empty((len(Mm), PQ_M), dtype=np.int64)
-                for sp in range(PQ_M):
-                    ascore = np.round(
-                        Mm[:, sp * sub : (sp + 1) * sub] @ Csub[sp].T
-                        - 0.5 * cc[sp],
-                        6,
-                    )
-                    codes[:, sp] = ascore.argmax(axis=1)
+                codes = _pq_encode(Mm, Csub, cc, sub)
                 ix = by_list[lid]  # query indices probing this list
                 adc = np.zeros((len(ix), len(Mm)))
                 rec2 = np.zeros(len(Mm))

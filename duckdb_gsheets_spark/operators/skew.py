@@ -121,6 +121,14 @@ def skew_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events")
     )
     total = events.agg(F.count(F.lit(1)).alias("n_total"))
+    return heavy_hitter_report(counts, total)
+
+
+def heavy_hitter_report(counts: DataFrame, total: DataFrame) -> DataFrame:
+    """The ``HH_K`` top rows of a per-user ``(user_id, n_events)``
+    count frame, ranked (count desc, user asc) with each one's share
+    of the one-row ``n_total`` — shared by the batch report and the
+    live monitor, which feeds it its materialized count sink."""
     top = counts.orderBy(F.desc("n_events"), "user_id").limit(HH_K)
     w = Window.orderBy(F.desc("n_events"), "user_id")
     return (

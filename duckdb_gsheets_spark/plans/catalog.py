@@ -35,26 +35,37 @@ TINY_DIMS: frozenset[str] = frozenset({"region", "nation"})
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table. Plain parquet scan → full pushdown support."""
+    return normalize_ts(read_parquet(spark, sf_dir, name))
+
+
+def read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The raw parquet scan of one test table, ``ts`` not yet
+    normalized (see :func:`normalize_ts`)."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     # The driver harness builds a vanilla SparkSession (none of
     # plans/session.py's confs apply), and events.parquet carries
     # TIMESTAMP(NANOS) columns that a vanilla read rejects with
     # PARQUET_TYPE_ILLEGAL. nanosAsLong is a runtime-settable SQL conf,
-    # so set it here — the one choke point every query loads through —
-    # and normalize the resulting long below.
+    # so set it here — the one choke point every query and stream
+    # loads through — and normalize the resulting long in
+    # normalize_ts.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    # TIMESTAMP(NANOS) parquet columns arrive as long (see session.py
-    # nanosAsLong); normalize to timestamp_ntz at micro precision so
-    # downstream plans see one type at every scale factor.
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def normalize_ts(df: DataFrame, ts_type: str = "timestamp_ntz") -> DataFrame:
+    """TIMESTAMP(NANOS) parquet columns arrive as long (nanosAsLong);
+    normalize ``ts`` to ``ts_type`` at micro precision so downstream
+    plans see one type at every scale factor. Batch tables use
+    timestamp_ntz; streams pass ``timestamp``, which watermarks need."""
     for field in df.schema.fields:
         if field.name == "ts" and isinstance(field.dataType, LongType):
             # Integer `div` (not `/`): epoch-nanos overflow double
             # precision, off-by-one-microsecond errors otherwise.
             df = df.withColumn(
                 "ts",
-                F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
+                F.timestamp_micros(F.expr("ts div 1000")).cast(ts_type),
             )
     return df
 

@@ -1,10 +1,22 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming twins of the batch operators.
 
 The reference has no streaming surface (SURVEY §2.2); this is the
 beyond-reference layer expressed idiomatically: ``readStream`` →
-watermark → windowed/stateful transforms → sink. Each op has a batch
-twin in ``operators.events`` so results are verifiable: run the stream
-with an ``availableNow`` trigger into a memory sink and compare.
+watermark → windowed/stateful transforms → sink. Every twin has a
+batch counterpart in one of nine ``operators`` modules (events, skew,
+text, curation, chunking, dedup, pipeline, similarity, multimodal), so
+results are verifiable: run the stream with an ``availableNow``
+trigger into a memory sink and compare.
+
+Kernel pattern: an operator family exposes ONE kernel ``(df,
+artifacts) -> df`` that the registered batch query and its twin both
+call, so a twin is ``run_to_memory(kernel(read_table_stream(...),
+static_artifacts), mode)`` plus only what streaming forces to differ —
+``dropDuplicates`` or a watermark in place of a distinct, long format
+in place of several distinct counts (a stream allows one stateful
+aggregation). Artifacts (vocabularies, thresholds, indexes, fitted
+weights) are fit once from the static table, the way a production
+intake gate loads them.
 
 Watermarks need TIMESTAMP (not NTZ); the fixed-UTC session makes the
 cast exact. At scale these run unchanged against a Kafka/file stream —
@@ -25,18 +37,19 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
-from duckdb_gsheets_spark.plans.catalog import load_table
+from duckdb_gsheets_spark.plans.catalog import (
+    load_table,
+    normalize_ts,
+    read_parquet,
+)
 
 
 def _table_stream_dir(sf_dir: str, table: str) -> str:
     """The file stream source requires a directory; expose a single
     test parquet through a symlinked temp dir (no testdata writes).
     The dir is DERIVED from sf_dir (create-once, reused) so repeated
-    stream construction in tests/benchmarks doesn't leak temp dirs.
-    One home for the digest/symlink scheme — events/documents/
-    embeddings readers all route through it."""
+    stream construction in tests/benchmarks doesn't leak temp dirs."""
     digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     stream_dir = os.path.join(
         tempfile.gettempdir(), f"{table}_stream_{digest}"
@@ -48,49 +61,21 @@ def _table_stream_dir(sf_dir: str, table: str) -> str:
     return stream_dir
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the events table (schema from the static
-    read; nanos→micros normalization matches plans.catalog)."""
-    # Same runtime conf as catalog.load_table: events.parquet carries
-    # TIMESTAMP(NANOS), unreadable in a vanilla session otherwise.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = (
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream of one test table. The schema comes from the
+    static scan and the TIMESTAMP(NANOS) handling from plans.catalog
+    (the one home of that decision); ``ts`` is cast to TIMESTAMP, not
+    NTZ, because watermarks need it."""
+    static = read_parquet(spark, sf_dir, name)
+    stream = normalize_ts(
         spark.readStream.schema(static.schema)
         .format("parquet")
-        .load(_table_stream_dir(sf_dir, "events"))
+        .load(_table_stream_dir(sf_dir, name)),
+        "timestamp",
     )
-    for field in static.schema.fields:
-        if field.name == "ts" and isinstance(field.dataType, LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def hourly_windowed_agg(events: DataFrame) -> DataFrame:
-    """Tumbling 1-hour windows with a 2-hour watermark: the streaming
-    twin of operators.events.events_hourly_agg."""
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * F.lit(100.0)).cast("long")).cast("double") / F.lit(100.0)).alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").cast("string").alias("hour_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def deduped_stream(events: DataFrame) -> DataFrame:
-    """Streaming exact dedup on event_id within the watermark — the
-    streaming twin of dropDuplicates (late replays are dropped)."""
-    return events.withWatermark("ts", "2 hours").dropDuplicates(["event_id"])
+    if "ts" in stream.columns:
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return stream
 
 
 def run_to_memory(
@@ -114,10 +99,7 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    deadline = time.time() + timeout_s
-    while query.isActive and time.time() < deadline:
-        time.sleep(0.2)
-    if not query.awaitTermination(5):
+    if not query.awaitTermination(timeout_s):
         # Timed out with the availableNow trigger still running:
         # the memory sink holds a PARTIAL result. Returning it would
         # silently corrupt the batch-equality contract — fail loud.
@@ -125,13 +107,47 @@ def run_to_memory(
         raise TimeoutError(
             f"streaming query {name} did not drain within {timeout_s}s"
         )
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    return stream_df.sparkSession.table(name)
 
 
 def _has_agg(df: DataFrame) -> bool:
     plan = df._jdf.queryExecution().logical().toString()
     return "Aggregate" in plan
+
+
+def _hourly_aggs() -> tuple:
+    """Event count and exact cents-grid value sum of one hourly cell."""
+    return (
+        F.count(F.lit(1)).alias("n_events"),
+        (
+            F.sum(F.round(F.col("value") * F.lit(100.0)).cast("long")).cast(
+                "double"
+            )
+            / F.lit(100.0)
+        ).alias("sum_value"),
+    )
+
+
+def hourly_windowed_agg(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour windows with a 2-hour watermark: the streaming
+    twin of operators.events.events_hourly_agg."""
+    return (
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
+        .agg(*_hourly_aggs())
+        .select(
+            F.col("window.start").cast("string").alias("hour_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def deduped_stream(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup on event_id within the watermark — the
+    streaming twin of dropDuplicates (late replays are dropped)."""
+    return events.withWatermark("ts", "2 hours").dropDuplicates(["event_id"])
 
 
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,12 +156,16 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch-verifiable: equals events_hourly_agg's counts (the stream
     processes the same finite input exactly once).
     """
-    return run_to_memory(hourly_windowed_agg(read_events_stream(spark, sf_dir)))
+    return run_to_memory(
+        hourly_windowed_agg(read_table_stream(spark, sf_dir, "events"))
+    )
 
 
 def streaming_dedupe_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end streaming dedup → distinct event count."""
-    out = run_to_memory(deduped_stream(read_events_stream(spark, sf_dir)))
+    out = run_to_memory(
+        deduped_stream(read_table_stream(spark, sf_dir, "events"))
+    )
     return out.agg(F.countDistinct("event_id").alias("n_distinct_events"))
 
 
@@ -172,7 +192,7 @@ def session_windowed_agg(events: DataFrame) -> DataFrame:
 def streaming_session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end: stream events → session_window agg → sink."""
     return run_to_memory(
-        session_windowed_agg(read_events_stream(spark, sf_dir))
+        session_windowed_agg(read_table_stream(spark, sf_dir, "events"))
     )
 
 
@@ -190,30 +210,11 @@ def sessionized_stream(events: DataFrame) -> DataFrame:
     any user count; per-user state is 2 longs.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_sessions", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last_us", LongType()),
-            StructField("n_sessions", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
+    out_schema = "user_id long, n_sessions long, n_events long"
+    state_schema = "last_us long, n_sessions long, n_events long"
 
     def fold_sessions(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
         if state.exists:
             last_us, n_sessions, n_events = state.get
         else:
@@ -252,7 +253,7 @@ def streaming_sessionize_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end: stream events → stateful sessionizer → per-user
     session/event counts."""
     return run_to_memory(
-        sessionized_stream(read_events_stream(spark, sf_dir)),
+        sessionized_stream(read_table_stream(spark, sf_dir, "events")),
         output_mode="update",
     )
 
@@ -275,27 +276,10 @@ def batch_equivalent_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def batch_equivalent_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch plan the streaming result must match."""
     events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.date_trunc("hour", F.col("ts")).cast("string").alias("hour_start"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * F.lit(100.0)).cast("long")).cast("double") / F.lit(100.0)).alias("sum_value"),
-        )
-    )
-
-
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the documents table (shared symlinked
-    create-once stream dir scheme — :func:`_table_stream_dir`)."""
-    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        spark.readStream.schema(static.schema)
-        .format("parquet")
-        .load(_table_stream_dir(sf_dir, "documents"))
-    )
+    return events.groupBy(
+        F.date_trunc("hour", F.col("ts")).cast("string").alias("hour_start"),
+        "event_type",
+    ).agg(*_hourly_aggs())
 
 
 def streaming_gopher_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,7 +296,7 @@ def streaming_gopher_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from duckdb_gsheets_spark.operators.text import gopher_rules
 
-    stream = read_documents_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     flags = gopher_rules(
         stream.where(F.col("text").isNotNull()), carry=("lang",)
     )
@@ -326,35 +310,23 @@ def streaming_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of corpus_resample: the language-rebalancing
     thresholds are computed ONCE from the static corpus (the offline
     artifact a production gate would load), broadcast onto the
-    documents stream, and the deterministic md5-prefix keep-filter
-    runs per micro-batch — stateless, so any arrival order yields the
-    same survivor set. Complete-mode rollup of kept docs/tokens per
-    language.
+    documents stream, and the batch keep kernel
+    (operators.curation.resample_kept — a deterministic md5-prefix
+    filter) runs per micro-batch — stateless, so any arrival order
+    yields the same survivor set. Complete-mode rollup of kept
+    docs/tokens per language.
     """
-    from duckdb_gsheets_spark.functions.text import WHITESPACE_SPLIT
     from duckdb_gsheets_spark.operators.curation import (
-        resample_keep_cond,
+        _doc_tokens,
+        resample_kept,
         resample_thresholds,
     )
 
-    def tokenized(df: DataFrame) -> DataFrame:
-        return (
-            df.where(F.col("text").isNotNull())
-            .select(
-                "doc_id",
-                "lang",
-                F.size(
-                    F.split(F.trim(F.col("text")), WHITESPACE_SPLIT)
-                ).alias("n_tokens"),
-            )
-        )
-
     thresholds = resample_thresholds(
-        tokenized(load_table(spark, sf_dir, "documents"))
+        _doc_tokens(load_table(spark, sf_dir, "documents"))
     )
-    stream = tokenized(read_documents_stream(spark, sf_dir))
-    kept = stream.join(F.broadcast(thresholds), "lang").where(
-        resample_keep_cond()
+    kept = resample_kept(
+        _doc_tokens(read_table_stream(spark, sf_dir, "documents")), thresholds
     )
     counts = kept.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs_kept"),
@@ -367,41 +339,27 @@ def streaming_oov_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of vocab_oov_rate: the tokenizer vocabulary is
     built ONCE from the static corpus (the offline artifact a
     production gate would load from the tokenizer-training job),
-    broadcast onto the documents stream, and every micro-batch's
-    tokens are checked against it — the live "is our tokenizer still
+    broadcast onto the documents stream by the batch kernel
+    (operators.curation.oov_flags), and every micro-batch's tokens
+    are checked against it — the live "is our tokenizer still
     covering the ingest" dashboard. Stateless per row, so arrival
     order cannot change the rollup; complete-mode per-language
     token/OOV counts.
     """
-    from duckdb_gsheets_spark.functions.text import WHITESPACE_SPLIT
-    from duckdb_gsheets_spark.operators.curation import frequency_vocab
-
-    static = load_table(spark, sf_dir, "documents")
-    vocab = frequency_vocab(
-        static.where(F.col("text").isNotNull()).select(
-            F.explode(
-                F.split(F.trim(F.col("text")), WHITESPACE_SPLIT)
-            ).alias("tok")
-        )
-    ).select("tok", F.lit(1).alias("in_vocab"))
-    stream = read_documents_stream(spark, sf_dir)
-    toks = (
-        stream.where(F.col("text").isNotNull())
-        .select(
-            "lang",
-            F.explode(
-                F.split(F.trim(F.col("text")), WHITESPACE_SPLIT)
-            ).alias("tok"),
-        )
+    from duckdb_gsheets_spark.operators.curation import (
+        _lang_tokens,
+        oov_flags,
     )
-    oov = F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0))
-    counts = (
-        toks.join(F.broadcast(vocab), "tok", "left")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            oov.alias("n_oov"),
-        )
+
+    flags = oov_flags(
+        _lang_tokens(read_table_stream(spark, sf_dir, "documents")),
+        _lang_tokens(load_table(spark, sf_dir, "documents")),
+    )
+    counts = flags.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0)).alias(
+            "n_oov"
+        ),
     )
     return run_to_memory(counts, output_mode="complete")
 
@@ -410,10 +368,11 @@ def streaming_contamination_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Stream–static twin of operators.chunking.contamination_ngram's
-    ``n_matched_ngrams``: incoming documents stream in, their n-grams
-    join a STATIC benchmark gram set (broadcast — the stream side never
-    shuffles for the join), stateful ``dropDuplicates`` replaces the
-    batch ``countDistinct`` (distinct aggregation is not available on
+    ``n_matched_ngrams``: incoming documents stream through the batch
+    n-gram kernel (chunking.contam_grams), join the STATIC benchmark
+    gram set (broadcast — the stream side never shuffles for the
+    join), stateful ``dropDuplicates`` replaces the batch
+    ``countDistinct`` (distinct aggregation is not available on
     streams), and the per-document rollup runs in complete mode.
 
     This is the production decontamination deployment shape: the
@@ -422,42 +381,15 @@ def streaming_contamination_counts(
     """
     from duckdb_gsheets_spark.operators.chunking import (
         BENCH_MOD,
-        CONTAM_N,
+        _contam_gram_frames,
+        contam_grams,
     )
-    from duckdb_gsheets_spark.functions.text import WHITESPACE_SPLIT
 
-    def grams_of(df: DataFrame) -> DataFrame:
-        toks = (
-            df.where(F.col("text").isNotNull())
-            .select(
-                "doc_id",
-                F.split(F.trim(F.col("text")), WHITESPACE_SPLIT).alias("toks"),
-            )
-            .withColumn("n_tokens", F.size("toks"))
-            .where(F.col("n_tokens") >= CONTAM_N)
-        )
-        gram = F.md5(
-            F.array_join(F.slice(F.col("toks"), F.col("pos"), CONTAM_N), " ")
-        )
-        return toks.select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.col("n_tokens") - (CONTAM_N - 1))
-            ).alias("pos"),
-            "toks",
-        ).select("doc_id", gram.alias("gram"))
-
-    bench = (
-        grams_of(load_table(spark, sf_dir, "documents"))
-        .where(F.col("doc_id") % BENCH_MOD == 0)
-        .select("gram")
-        .distinct()
-    )
-    stream = read_documents_stream(spark, sf_dir)
+    bench, _ = _contam_gram_frames(spark, sf_dir)
     matched = (
-        grams_of(stream)
+        contam_grams(read_table_stream(spark, sf_dir, "documents"))
         .where(F.col("doc_id") % BENCH_MOD != 0)
-        .join(F.broadcast(bench), "gram")
+        .join(F.broadcast(bench.select("gram").distinct()), "gram")
         .dropDuplicates(["doc_id", "gram"])
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_matched_ngrams"))
@@ -472,71 +404,38 @@ def streaming_incremental_dedup_counts(
     the ingest DELTA arrives as a stream, the corpus index
     (fingerprints, LSH band rows, shingle sets — the persisted
     artifact a production ingest gate loads) is static, and every
-    micro-batch probes it statelessly: an exact fingerprint join and a
-    band join + shingle-Jaccard verification. Candidate pairs dedup
-    through stateful ``dropDuplicates`` (a pair can recur across
-    bands), then ONE complete-mode aggregation rolls up per-document
+    micro-batch probes it through the batch probe kernel
+    (dedup.incremental_hits): an exact fingerprint join and a band
+    join + shingle-Jaccard verification, with stateful
+    ``dropDuplicates`` on the candidate pair (a pair can recur across
+    bands). ONE complete-mode aggregation then rolls up per-document
     match counts — streaming allows a single stateful aggregation, so
-    the exact/near verdict resolves in a stateless projection AFTER
-    the rollup.
+    the exact/near verdict resolves on the sink.
 
     Output: flagged delta docs only (a doc with no matches is unique
     and never enters the sink) — the batch-equality test checks the
     flagged set and the verdicts against the batch operator.
     """
-    from duckdb_gsheets_spark.functions import text as T
     from duckdb_gsheets_spark.operators.dedup import (
         DELTA_SOURCE,
-        MINHASH_JACCARD_THRESHOLD,
-        _band_rows,
-        minhash_signatures,
+        incremental_hits,
     )
 
     corpus = load_table(spark, sf_dir, "documents").where(
         F.col("source") != DELTA_SOURCE
     )
-    c_fp = corpus.select(
-        T.fingerprint(F.col("text")).alias("fp"),
-        F.col("doc_id").alias("c_id"),
-    )
-    sigs_c = minhash_signatures(corpus)
-    c_bands = _band_rows(sigs_c).withColumnRenamed("doc_id", "c_id")
-    c_shingles = sigs_c.select(
-        F.col("doc_id").alias("c_id"), F.col("shingles").alias("sh_b")
-    )
-
-    stream = read_documents_stream(spark, sf_dir).where(
+    delta = read_table_stream(spark, sf_dir, "documents").where(
         F.col("source") == DELTA_SOURCE
     )
-    exact_hits = (
-        stream.select("doc_id", T.fingerprint(F.col("text")).alias("fp"))
-        .join(c_fp, "fp")
-        .select("doc_id", F.lit("exact").alias("kind"))
-    )
-    sigs_b = minhash_signatures(stream)
-    jaccard = F.round(
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-        6,
-    )
-    near_hits = (
-        _band_rows(sigs_b, carry=("shingles",))
-        .withColumnsRenamed({"doc_id": "b_id", "shingles": "sh_a"})
-        .join(c_bands, ["band_idx", "band_hash"])
-        .dropDuplicates(["b_id", "c_id"])
-        # No broadcast hint: the corpus shingle table is index-sized
-        # (the batch twin's contract broadcasts the DELTA, never the
-        # corpus) — let Spark plan the stream-static join.
-        .join(c_shingles, "c_id")
-        .where(jaccard >= MINHASH_JACCARD_THRESHOLD)
-        .select(F.col("b_id").alias("doc_id"), F.lit("near").alias("kind"))
-    )
+    # No broadcast hint: the corpus side is index-sized (the batch
+    # query broadcasts the DELTA, never the corpus) — let Spark plan
+    # the stream-static joins.
     counts = (
-        exact_hits.unionByName(near_hits)
+        incremental_hits(delta, corpus, hint=lambda df: df)
         .groupBy("doc_id")
         .agg(
-            F.sum((F.col("kind") == "exact").cast("long")).alias("n_exact"),
-            F.sum((F.col("kind") == "near").cast("long")).alias("n_near"),
+            F.sum("is_exact").alias("n_exact"),
+            F.sum(F.lit(1) - F.col("is_exact")).alias("n_near"),
         )
     )
     return run_to_memory(counts, output_mode="complete")
@@ -545,22 +444,22 @@ def streaming_incremental_dedup_counts(
 def streaming_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of operators.events.events_active_users: the
     DAU/WAU/MAU dashboard fed by a live event stream. Per micro-batch,
-    each event expands STATELESSLY into its (target_day, window_kind,
-    user) contributions (narrow — the same explosion the batch
-    operator uses, since windowed COUNT DISTINCT exists on neither
-    batch nor stream); stateful ``dropDuplicates`` collapses repeat
-    contributions across batches, and ONE complete-mode aggregation
-    counts users per (day, kind) — streaming allows a single stateful
-    aggregation, so the three window widths ride a kind tag in long
-    format instead of three distinct-count columns.
+    distinct user-days expand STATELESSLY into their (target_day,
+    offset) contributions through the batch kernel
+    (events.active_user_contrib — windowed COUNT DISTINCT exists on
+    neither batch nor stream); stateful ``dropDuplicates`` collapses
+    repeat contributions across batches, and ONE complete-mode
+    aggregation counts users per (day, kind) — streaming allows a
+    single stateful aggregation, so the three window widths ride a
+    kind tag in long format instead of three distinct-count columns.
 
     The day spine (days that actually occur) comes from the static
     table, exactly like the other stream-static gates: a dashboard
     knows its reporting calendar; the stream supplies activity.
     """
     from duckdb_gsheets_spark.operators.events import (
-        MAU_WINDOW,
         WAU_WINDOW,
+        active_user_contrib,
     )
 
     days = (
@@ -568,33 +467,23 @@ def streaming_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.to_date("ts").alias("target"))
         .distinct()
     )
-    stream = read_events_stream(spark, sf_dir)
-    contrib = (
-        stream.select("user_id", F.to_date("ts").alias("day"))
-        # Collapse to distinct user-days BEFORE the 28× explosion
-        # (mirroring the batch operator): a user with 1000 events in
-        # one day would otherwise push 28k+ contribution rows through
-        # the shuffle into the downstream dedup state.
+    # Collapse to distinct user-days BEFORE the 28× explosion
+    # (mirroring the batch operator): a user with 1000 events in one
+    # day would otherwise push 28k+ contribution rows through the
+    # shuffle into the downstream dedup state.
+    user_days = (
+        read_table_stream(spark, sf_dir, "events")
+        .select("user_id", F.to_date("ts").alias("day"))
         .dropDuplicates(["user_id", "day"])
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(MAU_WINDOW - 1))
-            ).alias("off"),
-            "day",
-        )
-        .select(
-            "user_id",
-            "off",
-            F.date_add(F.col("day"), F.col("off")).alias("target"),
-        )
-        .withColumn(
-            "kind",
-            F.when(F.col("off") == 0, F.array(F.lit("dau"), F.lit("wau"), F.lit("mau")))
-            .when(F.col("off") < WAU_WINDOW, F.array(F.lit("wau"), F.lit("mau")))
-            .otherwise(F.array(F.lit("mau"))),
-        )
-        .select("user_id", "target", F.explode("kind").alias("kind"))
+    )
+    kind = (
+        F.when(F.col("off") == 0, F.array(F.lit("dau"), F.lit("wau"), F.lit("mau")))
+        .when(F.col("off") < WAU_WINDOW, F.array(F.lit("wau"), F.lit("mau")))
+        .otherwise(F.array(F.lit("mau")))
+    )
+    contrib = (
+        active_user_contrib(user_days)
+        .select("user_id", "target", F.explode(kind).alias("kind"))
         .join(F.broadcast(days), "target")
         .dropDuplicates(["target", "kind", "user_id"])
     )
@@ -630,7 +519,7 @@ def streaming_error_share_counts(
     than deduplicated/counted, the standard streaming trade the
     delay parameter prices. One complete-mode count per (day, kind).
     """
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     day = F.to_date("ts").cast("string").alias("day")
     ev = stream.select(day, F.lit("n_events").alias("kind"))
     err = stream.where(F.col("event_type") == "error")
@@ -655,59 +544,38 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-key monitor. The stream maintains ONE complete-mode count per
     user (the only stateful op — state is |users| counters, the same
     bound a count-min sketch would relax at extreme cardinality); the
-    k-row ranking and share happen on the materialized sink, which is
+    batch report's k-row ranking and share
+    (skew.heavy_hitter_report) run on the materialized sink, which is
     already a bounded batch table.
     """
-    from duckdb_gsheets_spark.operators.skew import HH_K
+    from duckdb_gsheets_spark.operators.skew import heavy_hitter_report
 
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     counts = stream.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events")
     )
     sink = run_to_memory(counts, output_mode="complete")
     total = sink.agg(F.sum("n_events").alias("n_total"))
-    top = sink.orderBy(F.desc("n_events"), "user_id").limit(HH_K)
-    return F.broadcast(top).join(F.broadcast(total)).select(
-        "user_id",
-        "n_events",
-        F.round(
-            F.col("n_events").cast("double")
-            / F.col("n_total").cast("double"),
-            6,
-        ).alias("traffic_share"),
-    )
+    return heavy_hitter_report(sink, total).drop("rank")
 
 
 def streaming_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of operators.events.events_conversion_lag_quantiles:
-    the live funnel-latency monitor. The stream maintains ONE
-    complete-mode conditional-min pair per user (state: two
-    timestamps per user — the same bound the batch rollup shuffles);
-    the quantile summary runs on the materialized |users|-row sink,
-    already a bounded batch table.
+    the live funnel-latency monitor. The stream maintains the batch
+    query's ONE conditional-min aggregation per user
+    (events.first_view_purchase; state: two timestamps per user — the
+    same bound the batch rollup shuffles); the batch quantile summary
+    runs on the materialized |users|-row sink, already a bounded
+    batch table.
     """
-    stream = read_events_stream(spark, sf_dir)
-    firsts = stream.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "view", F.col("ts"))
-        ).alias("v"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("p"),
+    from duckdb_gsheets_spark.operators.events import (
+        conversion_lag_summary,
+        first_view_purchase,
     )
-    sink = run_to_memory(firsts, output_mode="complete")
-    from duckdb_gsheets_spark.operators.events import _epoch_us as us
 
-    lags = sink.where(
-        F.col("v").isNotNull()
-        & F.col("p").isNotNull()
-        & (F.col("p") >= F.col("v"))
-    ).select((us("p") - us("v")).alias("lag_us"))
-    return lags.agg(
-        F.count(F.lit(1)).alias("n_converted"),
-        F.round(F.percentile("lag_us", 0.5) / F.lit(1e6), 6).alias("p50_s"),
-        F.round(F.percentile("lag_us", 0.9) / F.lit(1e6), 6).alias("p90_s"),
-        F.round(F.percentile("lag_us", 0.99) / F.lit(1e6), 6).alias("p99_s"),
+    firsts = first_view_purchase(read_table_stream(spark, sf_dir, "events"))
+    return conversion_lag_summary(
+        run_to_memory(firsts, output_mode="complete")
     )
 
 
@@ -749,17 +617,52 @@ def streaming_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     partials = run_to_memory(
-        hourly_partials_stream(read_events_stream(spark, sf_dir))
+        hourly_partials_stream(read_table_stream(spark, sf_dir, "events"))
     )
     return daily_from_hourly_partials(partials)
 
 
+def _view_purchase_pairs(events: DataFrame) -> DataFrame:
+    """(purchase, prior view) pairs: each purchase joined to the same
+    user's views from the preceding hour. On a stream both sides are
+    watermarked (2 h), so the join state for closed intervals is
+    dropped — without the time bound + watermarks it would grow
+    forever."""
+
+    def side(kind: str) -> DataFrame:
+        rows = events.where(F.col("event_type") == kind)
+        return rows.withWatermark("ts", "2 hours") if rows.isStreaming else rows
+
+    views = side("view").select(
+        F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts")
+    )
+    purchases = side("purchase").select(
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+        F.col("event_id").alias("p_event_id"),
+    )
+    return purchases.join(
+        views,
+        (F.col("p_user") == F.col("v_user"))
+        & (F.col("v_ts") <= F.col("p_ts"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
+        "inner",
+    )
+
+
+def _view_purchase_daily(pairs: DataFrame) -> DataFrame:
+    """Per-day purchases with a prior view, and pair count."""
+    return pairs.groupBy(
+        F.col("p_ts").cast("date").cast("string").alias("day")
+    ).agg(
+        F.countDistinct("p_event_id").alias("n_purchases_with_view"),
+        F.count(F.lit(1)).alias("n_pairs"),
+    )
+
+
 def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM interval join — the Structured Streaming operator
-    class the other twins don't cover: purchases joined to the same
-    user's views from the preceding hour, both sides watermarked so
-    the join state for closed intervals is dropped (without the time
-    bound + watermarks the state would grow forever).
+    class the other twins don't cover (:func:`_view_purchase_pairs`).
 
     The join emits (purchase, prior view) pairs in append mode; the
     daily rollup runs on the materialized sink (aggregation after a
@@ -768,64 +671,16 @@ def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator under test). Batch-verified against the identical
     DataFrame join on the static table.
     """
-    stream = read_events_stream(spark, sf_dir)
-    views = (
-        stream.where(F.col("event_type") == "view")
-        .withWatermark("ts", "2 hours")
-        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts"))
-    )
-    purchases = (
-        stream.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("p_event_id"),
-        )
-    )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    )
-    sink = run_to_memory(joined, output_mode="append")
-    return sink.groupBy(
-        F.col("p_ts").cast("date").cast("string").alias("day")
-    ).agg(
-        F.countDistinct("p_event_id").alias("n_purchases_with_view"),
-        F.count(F.lit(1)).alias("n_pairs"),
-    )
+    pairs = _view_purchase_pairs(read_table_stream(spark, sf_dir, "events"))
+    return _view_purchase_daily(run_to_memory(pairs, output_mode="append"))
 
 
 def batch_equivalent_view_purchase_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The identical interval join + rollup on the static table."""
-    from duckdb_gsheets_spark.plans.catalog import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    views = events.where(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts")
-    )
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("p_event_id"),
-    )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    )
-    return joined.groupBy(
-        F.col("p_ts").cast("date").cast("string").alias("day")
-    ).agg(
-        F.countDistinct("p_event_id").alias("n_purchases_with_view"),
-        F.count(F.lit(1)).alias("n_pairs"),
+    return _view_purchase_daily(
+        _view_purchase_pairs(load_table(spark, sf_dir, "events"))
     )
 
 
@@ -848,11 +703,11 @@ def streaming_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     than 2 h late in event time is dropped (not double-counted into
     its QI group), the trade the delay parameter prices. One
     complete-mode count per group follows; the ≤3-row banding runs
-    on the materialized sink through the same batch core's band
-    rules."""
-    from duckdb_gsheets_spark.operators.events import K_ANON
+    on the materialized sink through the batch core's band rule
+    (events.k_anon_band)."""
+    from duckdb_gsheets_spark.operators.events import k_anon_band
 
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     qi_user = (
         stream.withWatermark("ts", "2 hours")
         .select(
@@ -868,12 +723,7 @@ def streaming_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("nu")
     )
     sink = run_to_memory(per_group, output_mode="complete")
-    band = (
-        F.when(F.col("nu") >= K_ANON, F.lit(f"k_ge_{K_ANON}"))
-        .when(F.col("nu") >= 2, F.lit(f"k_2_{K_ANON - 1}"))
-        .otherwise(F.lit("k_1"))
-    )
-    return sink.groupBy(band.alias("band")).agg(
+    return sink.groupBy(k_anon_band().alias("band")).agg(
         F.count(F.lit(1)).alias("n_groups"),
         F.sum(F.col("nu").cast("long")).alias("user_slots"),
     )
@@ -885,28 +735,16 @@ def streaming_dsir_weight_counts(
     """Stream–static twin of the DSIR scoring pass
     (operators.curation.dsir_importance_weights): the ≤1024-row
     bucket log-ratio table is fit ONCE from the static corpus (the
-    persisted artifact a production ingest gate loads), shipped into
-    the stream as a map literal, and every arriving document scores
-    itself STATELESSLY — its hashed unigram+bigram feature array
-    (the batch path's exact ``dsir_feat_array`` expression) folds to
-    the scaled-long weight via a JVM ``aggregate`` over the map, no
-    explode, no stream-side shuffle before the rollup. A single
-    complete-mode aggregation then keeps the per-source ingest
-    ledger: docs, tokens, exact scaled-weight sum, and how many docs
-    score target-like (w > 0) — the dashboard a live DSIR intake
-    gate runs.
-
-    The per-row fold replaces the batch path's explode + broadcast
-    join + per-doc rollup: streaming allows one stateful aggregation,
-    so the per-document combine must happen inside the row — same
-    integers, same result (the batch-equality test pins it). Every
-    stream feature hits the map because the scored slice ⊆ the
-    fitting corpus; a production gate scoring NOVEL documents adds
-    the same add-one default the batch smoothing gives unseen buckets
-    (``coalesce(element_at(...), lit(unseen_llr))``).
+    persisted artifact a production ingest gate loads), and every
+    arriving document scores itself STATELESSLY through the batch
+    scoring kernel (:func:`dsir_row_scorer`) — no explode, no
+    stream-side shuffle before the rollup. A single complete-mode
+    aggregation then keeps the per-source ingest ledger: docs,
+    tokens, exact scaled-weight sum, and how many docs score
+    target-like (w > 0) — the dashboard a live DSIR intake gate runs.
     """
     scorer = dsir_row_scorer(spark, sf_dir)
-    scored = scorer(read_documents_stream(spark, sf_dir))
+    scored = scorer(read_table_stream(spark, sf_dir, "documents"))
     counts = scored.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("n_tokens").cast("long")).alias("n_tokens"),
@@ -920,47 +758,27 @@ def dsir_row_scorer(spark: SparkSession, sf_dir: str):
     """Build the STATELESS per-row DSIR scorer: fit the bucket
     log-ratio artifact once from the static corpus, return a
     transform ``documents-shaped DF → (doc_id, lang, source,
-    n_tokens, n_feats, w_scaled)`` that scores each row with a JVM
-    ``transform``+``aggregate`` fold over the map literal — no
-    explode, no join, no state, so it composes into any streaming
-    plan (and replays identically on checkpoint resume). Shared by
-    :func:`streaming_dsir_weight_counts` and the checkpoint-resume
-    test."""
-    from duckdb_gsheets_spark.functions import portable_hash as PH
+    n_tokens, n_feats, w_scaled)`` — the batch weights' own scoring
+    kernel (curation._dsir_score: a JVM ``aggregate`` fold of each
+    row's bucket array over the fitted table as an array literal) —
+    no explode, no join, no state, so it composes into any streaming
+    plan (and replays identically on checkpoint resume). Every
+    scored feature hits a fitted bucket while the scored slice ⊆ the
+    fitting corpus. Shared by :func:`streaming_dsir_weight_counts`
+    and the checkpoint-resume test."""
     from duckdb_gsheets_spark.operators.curation import (
-        DSIR_BUCKETS,
-        _doc_tokens,
+        _dsir_bucket_rows,
         _dsir_feats,
+        _dsir_score,
         dsir_bucket_llr,
-        dsir_feat_array,
     )
 
     static = load_table(spark, sf_dir, "documents")
-    llr_rows = dsir_bucket_llr(_dsir_feats(static)).collect()
-    llr_map = F.map_from_arrays(
-        F.lit([int(r.bucket) for r in llr_rows]).cast("array<bigint>"),
-        F.lit([int(r.llr) for r in llr_rows]).cast("array<bigint>"),
-    )
-
-    def score(docs: DataFrame) -> DataFrame:
-        feats = dsir_feat_array()
-        buckets = F.transform(
-            feats, lambda f: PH.tok_hash60(f) % DSIR_BUCKETS
-        )
-        return _doc_tokens(docs).select(
-            "doc_id",
-            "lang",
-            "source",
-            "n_tokens",
-            F.size(feats).cast("bigint").alias("n_feats"),
-            F.aggregate(
-                buckets,
-                F.lit(0).cast("bigint"),
-                lambda acc, b: acc + F.element_at(llr_map, b),
-            ).alias("w_scaled"),
-        )
-
-    return score
+    llr = {
+        int(r.bucket): int(r.llr)
+        for r in dsir_bucket_llr(_dsir_feats(static)).collect()
+    }
+    return lambda docs: _dsir_score(_dsir_bucket_rows(docs), llr)
 
 
 def doremi_row_gate(spark: SparkSession, sf_dir: str):
@@ -1049,7 +867,7 @@ def streaming_doremi_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict itself is stateless per row — no stream-side shuffle
     before the |domains|-row rollup."""
     gate = doremi_row_gate(spark, sf_dir)
-    verdicts = gate(read_documents_stream(spark, sf_dir))
+    verdicts = gate(read_table_stream(spark, sf_dir, "documents"))
     ledger = verdicts.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_seen"),
         F.sum(F.col("kept").cast("long")).alias("n_kept"),
@@ -1075,10 +893,11 @@ def phash_gate_ledger(
     delta's signatures come from the PER-ROW HOF formulation
     (multimodal.phash_row_signatures — bit-identical to the batch
     builder, test-pinned, and legal on a streaming frame because it
-    is a stateless projection), candidates block through the same
-    4×15-bit band join as multimodal_phash_neardup, and the ledger is
-    one rollup: per flagged delta doc, how many corpus payloads sit
-    within PHASH_MAX_HAMMING and the closest distance. A doc with no
+    is a stateless projection), candidates block through the batch
+    band kernel (multimodal.phash_band_rows, the 4×15-bit bands of
+    multimodal_phash_neardup), and the ledger is one rollup: per
+    flagged delta doc, how many corpus payloads sit within
+    PHASH_MAX_HAMMING and the closest distance. A doc with no
     perceptual match never enters the sink (the incremental-dedup
     twin's flagged-only contract).
 
@@ -1092,12 +911,11 @@ def phash_gate_ledger(
     itself)."""
     from duckdb_gsheets_spark.operators.dedup import DELTA_SOURCE
     from duckdb_gsheets_spark.operators.multimodal import (
-        PHASH_BANDS,
-        _pband_val,
+        PHASH_MAX_HAMMING,
         _phash_sigs_from_media,
         media_table,
+        phash_band_rows,
         phash_row_signatures,
-        PHASH_MAX_HAMMING,
     )
 
     if corpus_sigs is None:
@@ -1115,23 +933,7 @@ def phash_gate_ledger(
         )
         c_sigs = corpus_sigs.join(delta_ids, "doc_id", "left_anti")
 
-    def bands(frame: DataFrame, sig_col: str) -> DataFrame:
-        return frame.select(
-            "*",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_idx"),
-                            _pband_val(F.col(sig_col), b).alias("band_val"),
-                        )
-                        for b in range(PHASH_BANDS)
-                    ]
-                )
-            ).alias("band"),
-        ).select(*frame.columns, "band.band_idx", "band.band_val")
-
-    c_bands = bands(
+    c_bands = phash_band_rows(
         c_sigs.select(
             "format",
             F.col("doc_id").alias("c_id"),
@@ -1139,9 +941,7 @@ def phash_gate_ledger(
         ),
         "c_sig",
     )
-    b_bands = bands(
-        phash_row_signatures(delta_media), "sig"
-    )
+    b_bands = phash_band_rows(phash_row_signatures(delta_media), "sig")
     hamming = F.bit_count(F.col("sig").bitwiseXOR(F.col("c_sig")))
     return (
         b_bands.join(c_bands, ["format", "band_idx", "band_val"])
@@ -1168,7 +968,7 @@ def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_gsheets_spark.operators.dedup import DELTA_SOURCE
     from duckdb_gsheets_spark.operators.multimodal import media_from_docs
 
-    delta = read_documents_stream(spark, sf_dir).where(
+    delta = read_table_stream(spark, sf_dir, "documents").where(
         F.col("source") == DELTA_SOURCE
     )
     ledger = phash_gate_ledger(spark, sf_dir, media_from_docs(delta))
@@ -1179,64 +979,45 @@ def quality_survivor_scorer(spark: SparkSession, sf_dir: str):
     """Build the stateless QUALITY-SURVIVOR ingest gate (the
     stream–static twin of operators.dedup.dedup_quality_survivor): the
     static side is the corpus's ``fingerprint → incumbent`` index —
-    per exact-dup fingerprint, the election winner under the batch
-    family's exact total order (quality micro desc, doc_id asc) over
-    the NON-delta corpus — the persisted artifact a production intake
-    loads. The returned transform gives every documents-shaped row a
-    deterministic verdict: an arrival is KEPT iff its fingerprint is
-    NEW to the corpus or its quality beats the incumbent under the
-    same total order (higher qm, or equal qm with lower doc_id). One
-    stream–static left join, no stream-side state — replayable on
-    checkpoint resume."""
-    from duckdb_gsheets_spark.functions import text as T
-    from duckdb_gsheets_spark.operators.dedup import DELTA_SOURCE
+    per exact-dup fingerprint, the winner of the batch family's own
+    election (dedup.quality_elect: quality micro desc, doc_id asc)
+    over the NON-delta corpus — the persisted artifact a production
+    intake loads. The returned transform gives every documents-shaped
+    row a deterministic verdict: an arrival is KEPT iff its
+    fingerprint is NEW to the corpus or its quality beats the
+    incumbent under the same total order (higher qm, or equal qm with
+    lower doc_id). One stream–static left join, no stream-side state
+    — replayable on checkpoint resume."""
+    from duckdb_gsheets_spark.operators.dedup import (
+        DELTA_SOURCE,
+        quality_elect,
+        quality_scored,
+    )
 
-    corpus = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .where(F.col("source") != DELTA_SOURCE)
+    corpus = load_table(spark, sf_dir, "documents").where(
+        F.col("source") != DELTA_SOURCE
     )
-    scored = corpus.select(
-        "doc_id",
-        T.fingerprint(F.col("text")).alias("fp"),
-        F.round(T.quality_score(F.col("text")) * 1e6)
-        .cast("long")
-        .alias("qm"),
-    )
-    # max of (qm, −doc_id) is lexicographic: highest quality first,
-    # lowest doc_id on ties — the batch window's exact election.
     incumbents = (
-        scored.groupBy("fp")
-        .agg(
-            F.max(
-                F.struct(F.col("qm"), (-F.col("doc_id")).alias("nid"))
-            ).alias("b")
-        )
+        quality_elect(quality_scored(corpus))
+        .where(F.col("rk") == 1)
         .select(
-            "fp",
-            F.col("b.qm").alias("inc_qm"),
-            (-F.col("b.nid")).alias("inc_id"),
+            "fp", F.col("qm").alias("inc_qm"), F.col("doc_id").alias("inc_id")
         )
     )
 
     def gate(docs: DataFrame) -> DataFrame:
-        d = docs.where(F.col("text").isNotNull()).select(
-            "doc_id",
-            "lang",
-            "source",
-            T.fingerprint(F.col("text")).alias("fp"),
-            F.round(T.quality_score(F.col("text")) * 1e6)
-            .cast("long")
-            .alias("qm"),
-        )
-        return d.join(incumbents, "fp", "left").withColumn(
-            "kept",
-            F.col("inc_id").isNull()
-            | (F.col("qm") > F.col("inc_qm"))
-            | (
-                (F.col("qm") == F.col("inc_qm"))
-                & (F.col("doc_id") < F.col("inc_id"))
-            ),
+        return (
+            quality_scored(docs, "lang", "source")
+            .join(incumbents, "fp", "left")
+            .withColumn(
+                "kept",
+                F.col("inc_id").isNull()
+                | (F.col("qm") > F.col("inc_qm"))
+                | (
+                    (F.col("qm") == F.col("inc_qm"))
+                    & (F.col("doc_id") < F.col("inc_id"))
+                ),
+            )
         )
 
     return gate
@@ -1255,7 +1036,7 @@ def streaming_quality_survivor_gate(
     from duckdb_gsheets_spark.operators.dedup import DELTA_SOURCE
 
     gate = quality_survivor_scorer(spark, sf_dir)
-    delta = read_documents_stream(spark, sf_dir).where(
+    delta = read_table_stream(spark, sf_dir, "documents").where(
         F.col("source") == DELTA_SOURCE
     )
     ledger = quality_survivor_ledger(gate(delta))
@@ -1304,90 +1085,46 @@ def classifier_row_scorer(
     hashed-feature logistic probe once from the static corpus
     (operators.pipeline._classifier_fit), or consume a PERSISTED
     probe via ``weights`` (plans.classifier_probe.load_classifier_
-    probe — the production path), and ship the 1025 scaled-long
-    weights into
-    the stream as a map literal, and score each arriving document
-    with a JVM ``transform``+``aggregate`` fold over its hashed
-    unigram+bigram buckets — the fold reproduces the batch plan's
-    ``Σ cnt·w`` exactly (one weight added per feature occurrence, the
-    bias riding as ``nf·w₋₁``), so score, Pareto draw, and verdict
-    are bit-identical to pipeline_classifier_gate (the batch-equality
-    test pins the full ledger). No explode, no join, no state."""
-    from duckdb_gsheets_spark.functions import portable_hash as PH
+    probe — the production path), and score each arriving document
+    with the DSIR bucket fold (curation.bucket_lut_sum over the 1025
+    scaled-long weights as an array literal) — the fold reproduces
+    the batch plan's ``Σ cnt·w`` exactly (one weight added per
+    feature occurrence, the bias riding as ``nf·w₋₁``), and the
+    Pareto draw and verdict are the batch gate's own kernel
+    (pipeline.classifier_verdicts), so every verdict is bit-identical
+    to pipeline_classifier_gate (the batch-equality test pins the
+    full ledger). No explode, no join, no state."""
     from duckdb_gsheets_spark.operators.curation import (
-        DSIR_BUCKETS,
         _doc_tokens,
-        dsir_feat_array,
+        bucket_lut_sum,
+        dsir_bucket_array,
     )
     from duckdb_gsheets_spark.operators.pipeline import (
-        _CLS_DRAW_MICRO_SQL,
         _CLS_SCORE_MICRO_SQL,
         _classifier_fit,
+        classifier_verdicts,
     )
 
     if weights is None:
         docs = load_table(spark, sf_dir, "documents").where(
             F.col("text").isNotNull()
         )
-        w, _n = _classifier_fit(spark, docs)
-    else:
-        w = dict(weights)
-    bias = int(w.pop(-1, 0))
-    items = sorted(w.items())
-    w_map = F.map_from_arrays(
-        F.lit([b for b, _ in items]).cast("array<bigint>"),
-        F.lit([ws for _, ws in items]).cast("array<bigint>"),
-    )
+        weights, _n = _classifier_fit(spark, docs)
+    bias = int(weights.get(-1, 0))
 
     def score(frame: DataFrame) -> DataFrame:
-        feats = dsir_feat_array()
-        buckets = F.transform(
-            feats, lambda f: PH.tok_hash60(f) % DSIR_BUCKETS
+        barr = dsir_bucket_array()
+        nf = F.size(barr).cast("bigint")
+        scored = _doc_tokens(frame).select(
+            "doc_id",
+            "lang",
+            "source",
+            F.col("n_tokens").cast("long").alias("n_tokens"),
+            nf.alias("nf"),
+            (bucket_lut_sum(barr, weights) + nf * F.lit(bias)).alias("num"),
         )
-        return (
-            _doc_tokens(frame)
-            .select(
-                "doc_id",
-                "lang",
-                "source",
-                F.col("n_tokens").cast("long").alias("n_tokens"),
-                F.size(feats).cast("bigint").alias("nf"),
-                (
-                    F.aggregate(
-                        buckets,
-                        F.lit(0).cast("bigint"),
-                        lambda acc, b: acc
-                        + F.coalesce(
-                            F.element_at(w_map, b),
-                            F.lit(0).cast("bigint"),
-                        ),
-                    )
-                    + F.size(feats).cast("bigint") * F.lit(bias)
-                ).alias("num"),
-            )
-            .withColumn("score_micro", F.expr(_CLS_SCORE_MICRO_SQL))
-            .withColumn(
-                "ph32",
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("pareto|"),
-                                F.col("doc_id").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-            )
-            .withColumn("draw_micro", F.expr(_CLS_DRAW_MICRO_SQL))
-            .withColumn(
-                "kept",
-                F.col("score_micro") + F.col("draw_micro") > 1000000,
-            )
+        return classifier_verdicts(
+            scored.withColumn("score_micro", F.expr(_CLS_SCORE_MICRO_SQL))
         )
 
     return score
@@ -1396,36 +1133,16 @@ def classifier_row_scorer(
 def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream–static twin #31: the full corpus arrives as a stream,
     every document scores itself against the FROZEN classifier probe
-    (:func:`classifier_row_scorer`) and one complete-mode rollup
-    keeps the per-source gate ledger — identical row for row to the
-    batch pipeline_classifier_gate output, since the stream covers
-    the same corpus the batch query scores."""
+    (:func:`classifier_row_scorer`) and one complete-mode rollup —
+    the batch gate's own ledger (pipeline.classifier_ledger) — keeps
+    the per-source gate ledger, identical row for row to the batch
+    pipeline_classifier_gate output, since the stream covers the same
+    corpus the batch query scores."""
+    from duckdb_gsheets_spark.operators.pipeline import classifier_ledger
+
     scorer = classifier_row_scorer(spark, sf_dir)
-    scored = scorer(read_documents_stream(spark, sf_dir))
-    ledger = (
-        scored.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("kept").cast("long")).alias("n_kept"),
-            F.sum(
-                F.when(F.col("kept"), F.col("n_tokens")).otherwise(0)
-            ).alias("kept_tokens"),
-            F.sum("score_micro").alias("_ss"),
-            F.sum(
-                F.when(F.col("kept"), F.col("score_micro")).otherwise(0)
-            ).alias("_ks"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_kept",
-            "kept_tokens",
-            F.expr("_ss div n_docs").alias("mean_score_micro"),
-            F.expr(
-                "CASE WHEN n_kept > 0 THEN _ks div n_kept "
-                "ELSE CAST(0 AS BIGINT) END"
-            ).alias("kept_score_micro"),
-        )
+    ledger = classifier_ledger(
+        scorer(read_table_stream(spark, sf_dir, "documents"))
     )
     return run_to_memory(ledger, output_mode="complete")
 
@@ -1730,170 +1447,53 @@ def streaming_corpus_upsert_state(
 
 def streaming_ab_test_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live experiment monitor: the streaming twin of
-    ``operators.events.events_ab_test``. Arm assignment (md5 low hex
-    digit parity) and the cents-grid metric are stateless row
-    expressions on the event stream; ONE complete-mode aggregation
-    maintains per-arm n / Σx / Σx² as exact DECIMAL(38,0) integers —
-    the sufficient statistics of the Welch z, so the dashboard can
-    recompute the current z after every micro-batch without the
-    stream holding anything but two rows of state. The batch-equality
-    test folds the sink's final statistics through the same fixed
-    double expression and pins the batch readout's z exactly.
+    ``operators.events.events_ab_test``. The batch readout's
+    sufficient-statistics kernel (events.ab_arm_stats: md5 arm
+    assignment, cents grid, per-arm n / Σx / Σx² as exact
+    DECIMAL(38,0) integers) is ONE complete-mode aggregation on the
+    event stream, so the dashboard can recompute the current Welch z
+    after every micro-batch without the stream holding anything but
+    two rows of state. The batch-equality test folds the sink's final
+    statistics through the same fixed double expression and pins the
+    batch readout's z exactly.
     """
-    stream = read_events_stream(spark, sf_dir)
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("long")
-    last_hex = F.substring(F.md5(F.col("user_id").cast("string")), 32, 1)
-    arm = F.when(
-        last_hex.isin("0", "2", "4", "6", "8", "a", "c", "e"), "A"
-    ).otherwise("B")
-    pts = stream.where(F.col("event_type") == "purchase").select(
-        arm.alias("arm"), cents.alias("x")
+    from duckdb_gsheets_spark.operators.events import ab_arm_stats
+
+    return run_to_memory(
+        ab_arm_stats(read_table_stream(spark, sf_dir, "events")),
+        output_mode="complete",
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — exact widening
-    counts = pts.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("x") * F.col("x"))).alias("sxx"),
-    )
-    return run_to_memory(counts, output_mode="complete")
 
 
 def streaming_fineweb_gate_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming form of the FineWeb intake gates
-    (operators.pipeline.pipeline_fineweb_corpus stages 1-2): the
-    Gopher rule projection and the C4/RefinedWeb length+blacklist
-    flags are stateless row expressions on the document stream, and
-    ONE complete-mode rollup keeps the per-source attrition ledger
-    (docs seen, quality passes, quality∧C4 passes, tokens surviving
-    the gates). The batch funnel's third stage — exact dedup — is
-    deliberately NOT here: canonical-survivor selection needs corpus
-    state, which is the incremental-dedup ingest gate's job
-    (:func:`streaming_incremental_dedup_counts`); a production intake
-    chains the two. Batch equality pins stages 1-2 against the batch
-    funnel's ledger columns.
+    (operators.pipeline.pipeline_fineweb_corpus stages 1-2): the batch
+    funnel's stateless flag kernel (pipeline.fineweb_staged — Gopher
+    rules, C4/RefinedWeb length+blacklist) runs on the document
+    stream, and ONE complete-mode rollup keeps the per-source
+    attrition ledger (docs seen, quality passes, quality∧C4 passes,
+    tokens surviving the gates). The batch funnel's third stage —
+    exact dedup — is deliberately NOT here: canonical-survivor
+    selection needs corpus state, which is the incremental-dedup
+    ingest gate's job (:func:`streaming_incremental_dedup_counts`); a
+    production intake chains the two. Batch equality pins stages 1-2
+    against the batch funnel's ledger columns.
     """
-    from duckdb_gsheets_spark.operators.pipeline import C4_MIN_TOKENS
-    from duckdb_gsheets_spark.operators.text import gopher_rules
+    from duckdb_gsheets_spark.operators.pipeline import fineweb_staged
 
-    stream = read_documents_stream(spark, sf_dir).where(
-        F.col("text").isNotNull()
-    )
-    c = F.col("text")
-    flags = gopher_rules(stream, carry=("source", "text"))
-    c4_pass = (
-        (F.col("n_tokens") >= C4_MIN_TOKENS)
-        & ~c.contains("{")
-        & ~c.contains("}")
-        & ~F.lower(c).contains("lorem ipsum")
-    )
-    staged = flags.select(
-        "source",
-        "n_tokens",
-        F.col("passes").alias("q_pass"),
-        (c4_pass.cast("int") * F.col("passes")).alias("surv"),
-    )
+    staged = fineweb_staged(read_table_stream(spark, sf_dir, "documents"))
+    surv = F.col("q_pass") * F.col("c4_pass")
     counts = staged.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("q_pass").cast("long")).alias("n_pass_quality"),
-        F.sum(F.col("surv").cast("long")).alias("n_pass_c4"),
+        F.sum(surv.cast("long")).alias("n_pass_c4"),
         F.sum(
-            F.when(F.col("surv") == 1, F.col("n_tokens").cast("long"))
-            .otherwise(0)
+            F.when(surv == 1, F.col("n_tokens").cast("long")).otherwise(0)
         ).alias("tok_surviving"),
     )
     return run_to_memory(counts, output_mode="complete")
-
-
-def streaming_substring_scrub_counts(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming ExactSubstr intake scrubber: the stream-static twin
-    of ``operators.dedup.dedup_substring_scrub``. The top-K repeated
-    substrings are fit ONCE from the static corpus (the suffix-sort
-    spine collapses to a ≤LRS_TOPK-row candidate table — bounded
-    model state, same fit-once pattern as the DSIR scorer), shipped
-    to executors as literal arrays, and each streamed document gets a
-    STATELESS per-row removal ledger: occurrences of each candidate
-    counted by a JVM higher-order filter over token positions — no
-    state store, no shuffle, append mode.
-
-    A production intake chains this after the quality gates: the
-    ledger says how many tokens an ExactSubstr scrub would cut from
-    each incoming document BEFORE it enters the corpus. Batch
-    equality pins every (doc_id, n_spans, tokens_matched,
-    max_match_len) row against the batch manifest.
-    """
-    from duckdb_gsheets_spark.functions.text import tokens
-    from duckdb_gsheets_spark.operators.dedup import (
-        _lrs_candidates,
-        _lrs_tables,
-    )
-
-    cands = [
-        (int(r.l), list(r.sub_arr))
-        for r in _lrs_candidates(*_lrs_tables(spark, sf_dir)).collect()
-    ]
-    stream = read_documents_stream(spark, sf_dir).where(
-        F.col("text").isNotNull()
-    )
-    if not cands:
-        # No repeated substring >= LRS_MIN_MATCH in the fitting
-        # corpus: the ledger is legitimately EMPTY (the batch twin
-        # returns an empty frame on the same input) — keep the
-        # stream/sink shape, emit no rows.
-        empty = stream.select(
-            "doc_id",
-            F.lit(0).cast("long").alias("n_spans"),
-            F.lit(0).cast("long").alias("tokens_matched"),
-            F.lit(0).cast("int").alias("max_match_len"),
-        ).where(F.lit(False))
-        return run_to_memory(empty, output_mode="append")
-    toks = tokens(F.col("text"))
-
-    def occ_of(length: int, sub: list[str]):
-        # occurrence count of one candidate: positions p with
-        # toks[p : p+length] == sub. sequence() is guarded to >= 1
-        # element (descending sequences otherwise); a too-short
-        # document fails the slice compare at p=1 naturally.
-        sub_lit = F.array(*[F.lit(t) for t in sub])
-        npos = F.greatest(F.size(toks) - F.lit(length - 1), F.lit(1))
-        return F.size(
-            F.filter(
-                F.sequence(F.lit(1), npos),
-                lambda p: F.slice(toks, p, F.lit(length)) == sub_lit,
-            )
-        )
-
-    sel = stream.select(
-        "doc_id",
-        *[
-            occ_of(length, sub).alias(f"occ_{i}")
-            for i, (length, sub) in enumerate(cands)
-        ],
-    )
-    occ = [F.col(f"occ_{i}") for i in range(len(cands))]
-    lens = [length for length, _ in cands]
-    n_spans = occ[0]
-    tokens_matched = (occ[0] * lens[0]).cast("long")
-    hit_lens = [
-        F.when(occ[i] > 0, F.lit(lens[i])).otherwise(F.lit(0))
-        for i in range(len(cands))
-    ]
-    for i in range(1, len(cands)):
-        n_spans = n_spans + occ[i]
-        tokens_matched = tokens_matched + (occ[i] * lens[i]).cast("long")
-    max_match_len = (
-        F.greatest(*hit_lens) if len(hit_lens) > 1 else hit_lens[0]
-    )
-    out = sel.select(
-        "doc_id",
-        n_spans.cast("long").alias("n_spans"),
-        tokens_matched.alias("tokens_matched"),
-        max_match_len.cast("int").alias("max_match_len"),
-    ).where(F.col("n_spans") > 0)
-    return run_to_memory(out, output_mode="append")
 
 
 def _exactsubstr_fit_candidates(
@@ -1918,11 +1518,18 @@ def _exactsubstr_span_array(toks, cands: list[tuple[int, list[str]]]):
     """``array<struct<s,e>>`` of ALL top-K candidates' match spans in
     the token array, sorted by (start, end) — one pure-JVM expression
     (sequence → slice-equality filter → transform per candidate,
-    flattened). Shared by the retention twin (interval-union fold
-    over it) and the apply twin (per-token membership filter against
-    it), so the two read the same spans by construction."""
+    flattened); an empty candidate table gives an empty array. Shared
+    by the scrub-ledger twin (span count/lengths), the retention twin
+    (interval-union fold over it) and the apply twin (per-token
+    membership filter against it), so all three read the same spans
+    by construction."""
+    if not cands:
+        return F.array().cast("array<struct<s:int,e:int>>")
 
     def spans_of(length: int, sub: list[str]):
+        # sequence() is guarded to >= 1 element (descending sequences
+        # otherwise); a too-short document fails the slice compare at
+        # p=1 naturally.
         sub_lit = F.array(*[F.lit(t) for t in sub])
         npos = F.greatest(F.size(toks) - F.lit(length - 1), F.lit(1))
         return F.transform(
@@ -1938,6 +1545,62 @@ def _exactsubstr_span_array(toks, cands: list[tuple[int, list[str]]]):
     return F.array_sort(
         F.flatten(F.array(*[spans_of(ln, sub) for ln, sub in cands]))
     )
+
+
+def _exactsubstr_stream(spark: SparkSession, sf_dir: str):
+    """``(documents stream with non-NULL text, token array, span array)``
+    — the shared front of the three ExactSubstr intake twins, the span
+    array built from the candidates fit once on the static corpus."""
+    from duckdb_gsheets_spark.functions.text import tokens
+
+    cands = _exactsubstr_fit_candidates(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents").where(
+        F.col("text").isNotNull()
+    )
+    toks = tokens(F.col("text"))
+    return stream, toks, _exactsubstr_span_array(toks, cands)
+
+
+def streaming_substring_scrub_counts(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Streaming ExactSubstr intake scrubber: the stream-static twin
+    of ``operators.dedup.dedup_substring_scrub``. The top-K repeated
+    substrings are fit ONCE from the static corpus (the suffix-sort
+    spine collapses to a ≤LRS_TOPK-row candidate table — bounded
+    model state, same fit-once pattern as the DSIR scorer), shipped
+    to executors as literal arrays, and each streamed document gets a
+    STATELESS per-row removal ledger read off its span array (one
+    span per candidate occurrence) — no state store, no shuffle,
+    append mode.
+
+    A production intake chains this after the quality gates: the
+    ledger says how many tokens an ExactSubstr scrub would cut from
+    each incoming document BEFORE it enters the corpus. Batch
+    equality pins every (doc_id, n_spans, tokens_matched,
+    max_match_len) row against the batch manifest; a fitting corpus
+    with no repeated substring gives an empty ledger (as the batch
+    twin does).
+    """
+    stream, _, spans = _exactsubstr_stream(spark, sf_dir)
+    span_len = lambda iv: iv["e"] - iv["s"] + 1  # noqa: E731
+    out = (
+        stream.select("doc_id", spans.alias("spans"))
+        .select(
+            "doc_id",
+            F.size("spans").cast("long").alias("n_spans"),
+            F.aggregate(
+                "spans",
+                F.lit(0).cast("long"),
+                lambda acc, iv: acc + span_len(iv),
+            ).alias("tokens_matched"),
+            F.array_max(F.transform("spans", span_len))
+            .cast("int")
+            .alias("max_match_len"),
+        )
+        .where(F.col("n_spans") > 0)
+    )
+    return run_to_memory(out, output_mode="append")
 
 
 def streaming_exactsubstr_apply(
@@ -1960,18 +1623,7 @@ def streaming_exactsubstr_apply(
     Append mode, no aggregation state at all. Batch equality pins
     every row against the registered apply query.
     """
-    from duckdb_gsheets_spark.functions.text import tokens
-
-    cands = _exactsubstr_fit_candidates(spark, sf_dir)
-    stream = read_documents_stream(spark, sf_dir).where(
-        F.col("text").isNotNull()
-    )
-    toks = tokens(F.col("text"))
-    spans = (
-        _exactsubstr_span_array(toks, cands)
-        if cands
-        else F.array().cast("array<struct<s:int,e:int>>")
-    )
+    stream, toks, spans = _exactsubstr_stream(spark, sf_dir)
     kept = F.filter(
         F.transform(
             toks,
@@ -2021,46 +1673,33 @@ def streaming_exactsubstr_retention(
     n_docs_scrubbed, tokens_in, tokens_scrubbed, tokens_out,
     token_retention) row against the composed batch pipeline.
     """
-    from duckdb_gsheets_spark.functions.text import tokens
-
-    cands = _exactsubstr_fit_candidates(spark, sf_dir)
-    stream = read_documents_stream(spark, sf_dir).where(
-        F.col("text").isNotNull()
-    )
-    toks = tokens(F.col("text"))
+    stream, toks, spans = _exactsubstr_stream(spark, sf_dir)
     n_tokens = F.size(toks).cast("long")
-
-    if cands:
-        # Interval union of ALL candidates' spans: array_sort orders
-        # struct<s,e> lexicographically (start, then end) — the exact
-        # order the island sweep needs — then one aggregate() fold
-        # carries (covered, running_max_end) and adds only the part
-        # of each span past the running max. Identical arithmetic to
-        # the batch pipeline's windowed sweep.
-        all_spans = _exactsubstr_span_array(toks, cands)
-        matched = F.aggregate(
-            all_spans,
-            F.struct(
-                F.lit(0).cast("long").alias("cov"),
-                F.lit(0).cast("long").alias("end"),
-            ),
-            lambda acc, iv: F.struct(
-                (
-                    acc["cov"]
-                    + F.greatest(
-                        F.lit(0).cast("long"),
-                        iv["e"].cast("long")
-                        - F.greatest(
-                            iv["s"].cast("long") - 1, acc["end"]
-                        ),
-                    )
-                ).alias("cov"),
-                F.greatest(acc["end"], iv["e"].cast("long")).alias("end"),
-            ),
-            lambda acc: acc["cov"],
-        )
-    else:
-        matched = F.lit(0).cast("long")
+    # Interval union of ALL candidates' spans: array_sort orders
+    # struct<s,e> lexicographically (start, then end) — the exact
+    # order the island sweep needs — then one aggregate() fold
+    # carries (covered, running_max_end) and adds only the part of
+    # each span past the running max. Identical arithmetic to the
+    # batch pipeline's windowed sweep.
+    matched = F.aggregate(
+        spans,
+        F.struct(
+            F.lit(0).cast("long").alias("cov"),
+            F.lit(0).cast("long").alias("end"),
+        ),
+        lambda acc, iv: F.struct(
+            (
+                acc["cov"]
+                + F.greatest(
+                    F.lit(0).cast("long"),
+                    iv["e"].cast("long")
+                    - F.greatest(iv["s"].cast("long") - 1, acc["end"]),
+                )
+            ).alias("cov"),
+            F.greatest(acc["end"], iv["e"].cast("long")).alias("end"),
+        ),
+        lambda acc: acc["cov"],
+    )
     per_doc = stream.select(
         "source",
         n_tokens.alias("n_tokens"),
@@ -2097,14 +1736,18 @@ def streaming_exactsubstr_retention(
     return run_to_memory(agg, output_mode="complete")
 
 
-def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the embeddings table (shared symlinked
-    create-once stream dir scheme — :func:`_table_stream_dir`)."""
-    static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+def _query_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ANN query slice of the embeddings stream: ``(vec_a, emb_a)``."""
+    from duckdb_gsheets_spark.functions.vectors import to_double
+    from duckdb_gsheets_spark.operators.similarity import N_QUERY_VECTORS
+
     return (
-        spark.readStream.schema(static.schema)
-        .format("parquet")
-        .load(_table_stream_dir(sf_dir, "embeddings"))
+        read_table_stream(spark, sf_dir, "embeddings")
+        .where(F.col("vec_id") < N_QUERY_VECTORS)
+        .select(
+            F.col("vec_id").alias("vec_a"),
+            to_double(F.col("embedding")).alias("emb_a"),
+        )
     )
 
 
@@ -2135,12 +1778,9 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_pre,
         norm,
         probe_lists_np,
-        to_double,
     )
     from duckdb_gsheets_spark.operators.similarity import (
         IVF_NPROBE,
-        N_QUERY_VECTORS,
-        TOPK_K,
         _collect_ivf_inputs,
         ivf_assignments,
     )
@@ -2160,12 +1800,7 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         IVF_NPROBE,
     )
     queries = (
-        read_embeddings_stream(spark, sf_dir)
-        .where(F.col("vec_id") < N_QUERY_VECTORS)
-        .select(
-            F.col("vec_id").alias("vec_a"),
-            to_double(F.col("embedding")).alias("emb_a"),
-        )
+        _query_vectors(spark, sf_dir)
         .withColumn("norm_a", norm(F.col("emb_a")))
         .withColumn("list_id", F.explode(probes(F.col("emb_a"))))
     )
@@ -2246,7 +1881,6 @@ def streaming_sq8_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         to_double,
     )
     from duckdb_gsheets_spark.operators.similarity import (
-        N_QUERY_VECTORS,
         _absmax_literal,
         _sq8_dequant,
     )
@@ -2257,14 +1891,8 @@ def streaming_sq8_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = emb.select(
         F.col("vec_id").alias("vec_b"), deq.alias("emb_b")
     ).withColumn("norm_b", norm(F.col("emb_b")))
-    queries = (
-        read_embeddings_stream(spark, sf_dir)
-        .where(F.col("vec_id") < N_QUERY_VECTORS)
-        .select(
-            F.col("vec_id").alias("vec_a"),
-            to_double(F.col("embedding")).alias("emb_a"),
-        )
-        .withColumn("norm_a", norm(F.col("emb_a")))
+    queries = _query_vectors(spark, sf_dir).withColumn(
+        "norm_a", norm(F.col("emb_a"))
     )
     scored = queries.join(
         index, F.col("vec_a") != F.col("vec_b")
@@ -2288,18 +1916,17 @@ def streaming_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ann_ivfpq_topk (IVFADC): online retrieval
     against the composed IVF-PQ index. The index — ``(list_id,
     vec_b, codes, rec2)`` — is built ONCE from the static corpus by
-    the same coarse-assign + PQ-encode math as the registered query's
-    fused kernel (identical round-6 + first-occurrence-argmax
-    contracts, codebook from the shared _pq_codebook helper) and
-    eagerly checkpointed: the trained-index artifact a serving fleet
-    loads, 32× smaller than the float corpus. Arriving queries probe
-    their nprobe lists (the same per-row probe_lists_np pandas_udf
-    the IVF twin uses), candidates come from the stream-static
-    equi-join on ``list_id`` — each micro-batch touches only probed
-    partitions — and ADC scoring is a vectorized Arrow udf replaying
-    the kernel's per-subspace LUT einsum and gather in the same
-    subspace order, so similarities agree bit-for-bit before the
-    shared round-6.
+    the registered query's own coarse-assign and PQ-encode kernels
+    (similarity._coarse_lists / _pq_encode, codebook from the shared
+    _pq_codebook helper) and eagerly checkpointed: the trained-index
+    artifact a serving fleet loads, 32× smaller than the float
+    corpus. Arriving queries probe their nprobe lists (the same
+    per-row probe_lists_np pandas_udf the IVF twin uses), candidates
+    come from the stream-static equi-join on ``list_id`` — each
+    micro-batch touches only probed partitions — and ADC scoring is a
+    vectorized Arrow udf replaying the kernel's per-subspace LUT
+    einsum and gather in the same subspace order, so similarities
+    agree bit-for-bit before the shared round-6.
 
     Batch-equality: the drained stream must reproduce the registered
     ann_ivfpq_topk rows verbatim (tests/test_streaming.py)."""
@@ -2312,46 +1939,37 @@ def streaming_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from duckdb_gsheets_spark.operators.similarity import (
         IVF_NPROBE,
-        N_QUERY_VECTORS,
         PQ_M,
+        _coarse_lists,
         _collect_ivf_inputs,
         _collect_pq_inputs,
         _pq_codebook,
+        _pq_encode,
+        _probe_selection,
     )
     from duckdb_gsheets_spark.plans.catalog import fan_out
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroid_rows, _ = _collect_ivf_inputs(spark, sf_dir)
+    centroid_rows, query_rows = _collect_ivf_inputs(spark, sf_dir)
     code_rows, _ = _collect_pq_inputs(spark, sf_dir)
-    unit = np.array([r.emb for r in centroid_rows])
-    unit = unit / np.linalg.norm(unit, axis=1, keepdims=True)
-    id_arr = np.asarray([r.vec_id for r in centroid_rows])
+    unit, id_arr, *_ = _probe_selection(centroid_rows, query_rows, IVF_NPROBE)
     Csub, cc, sub = _pq_codebook(code_rows)
 
     def encode_batches(batches):
-        # index build: coarse-assign + PQ-encode, the registered
-        # kernel's exact math (round-6 scores, argmax = first
-        # occurrence), emitted as rows instead of scored in place
+        # index build: the registered kernel's coarse-assign +
+        # PQ-encode, emitted as rows instead of scored in place; rec2
+        # folds subspaces in the kernel's ascending order
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             M = np.stack(pdf["emb"].to_numpy())
-            norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-            s = np.round((M @ unit.T) / norms[:, None], 6)
-            lists = id_arr[s.argmax(axis=1)]
-            codes = np.empty((len(M), PQ_M), dtype=np.int64)
+            codes = _pq_encode(M, Csub, cc, sub)
             rec2 = np.zeros(len(M))
             for sp in range(PQ_M):
-                ascore = np.round(
-                    M[:, sp * sub : (sp + 1) * sub] @ Csub[sp].T
-                    - 0.5 * cc[sp],
-                    6,
-                )
-                codes[:, sp] = ascore.argmax(axis=1)
                 rec2 += cc[sp][codes[:, sp]]
             yield pd.DataFrame(
                 {
-                    "list_id": lists,
+                    "list_id": _coarse_lists(M, unit, id_arr),
                     "vec_b": pdf["vec_id"].to_numpy(),
                     "codes": list(codes),
                     "rec2": rec2,
@@ -2393,14 +2011,8 @@ def streaming_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = probe_lists_np(
         np.array([r.emb for r in centroid_rows]), id_arr, IVF_NPROBE
     )
-    queries = (
-        read_embeddings_stream(spark, sf_dir)
-        .where(F.col("vec_id") < N_QUERY_VECTORS)
-        .select(
-            F.col("vec_id").alias("vec_a"),
-            to_double(F.col("embedding")).alias("emb_a"),
-        )
-        .withColumn("list_id", F.explode(probes(F.col("emb_a"))))
+    queries = _query_vectors(spark, sf_dir).withColumn(
+        "list_id", F.explode(probes(F.col("emb_a")))
     )
     scored = (
         queries.join(index, "list_id")
@@ -2424,40 +2036,37 @@ def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark slice (chunking.bloom_artifact — the same artifact the
     batch audit ships), broadcast as a one-row literal, and every
     arriving document is screened by ONE per-row JVM higher-order
-    expression (transform→exists over its n-grams — no explode, no
-    per-doc shuffle), feeding a single complete-mode per-source
-    rollup. This is the intake-gate deployment shape: the filter is
-    constant-size and mergeable, the verdict is stateless per row, so
-    any arrival order and any micro-batch boundary give the same
-    counts — which the batch-equality test pins against the batch
-    audit's (n_docs_screened, n_bloom_flagged) columns.
+    expression (chunking.bloom_doc_flag: transform→exists over its
+    n-grams — no explode, no per-doc shuffle), feeding a single
+    complete-mode per-source rollup. This is the intake-gate
+    deployment shape: the filter is constant-size and mergeable, the
+    verdict is stateless per row, so any arrival order and any
+    micro-batch boundary give the same counts — which the
+    batch-equality test pins against the batch audit's
+    (n_docs_screened, n_bloom_flagged) columns.
 
     The exact-containment and FP columns stay batch-only by design: a
     live gate cannot afford the benchmark gram-set join; measuring
     the FP rate is the OFFLINE audit's job (contamination_bloom).
     """
-    from duckdb_gsheets_spark.functions.text import WHITESPACE_SPLIT
     from duckdb_gsheets_spark.operators.chunking import (
         BENCH_MOD,
         CONTAM_N,
         bloom_artifact,
         bloom_doc_flag,
     )
+    from duckdb_gsheets_spark.operators.curation import _doc_tokens
 
     m, words = bloom_artifact(spark, sf_dir)
     mask_df = spark.createDataFrame(
         [(1, words)], "join_key int, bloom_words array<long>"
     )
     docs = (
-        read_documents_stream(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .where(F.col("doc_id") % BENCH_MOD != 0)
-        .select(
-            "doc_id",
-            "source",
-            F.split(F.trim(F.col("text")), WHITESPACE_SPLIT).alias("toks"),
+        _doc_tokens(
+            read_table_stream(spark, sf_dir, "documents"), carry=("source",)
         )
-        .where(F.size("toks") >= CONTAM_N)
+        .where(F.col("doc_id") % BENCH_MOD != 0)
+        .where(F.col("n_tokens") >= CONTAM_N)
         .withColumn("join_key", F.lit(1))
     )
     flagged = docs.join(F.broadcast(mask_df), "join_key").select(

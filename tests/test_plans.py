@@ -1593,3 +1593,33 @@ def test_classifier_probe_artifact_roundtrip_and_refusals(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(meta_path)
     with pytest.raises(ValueError, match="does not match this session"):
         CP.load_classifier_probe(spark, SF, art)
+
+
+def test_whitespace_split_lives_only_in_functions_text():
+    """One whitespace tokenizer: a Spark ``split`` on ``\\s+`` may
+    appear only in functions/text.py (``T.tokens``); every operator
+    and streaming twin calls ``T.tokens`` / ``T.token_count``, so the
+    tokenization every oracle mirrors cannot drift between sites."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "duckdb_gsheets_spark"
+
+    def is_ws_pattern(arg) -> bool:
+        if isinstance(arg, ast.Constant):
+            return arg.value == "\\s+"
+        return "WHITESPACE_SPLIT" in (
+            getattr(arg, "id", None), getattr(arg, "attr", None)
+        )
+
+    sites = [
+        f"{path.relative_to(pkg).as_posix()}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None))
+        == "split"
+        and any(is_ws_pattern(a) for a in node.args[1:])
+    ]
+    assert any(s.startswith("functions/text.py:") for s in sites)
+    assert [s for s in sites if not s.startswith("functions/text.py:")] == []

@@ -1,12 +1,133 @@
 """Structured Streaming ops verified against their batch twins."""
 
+import pytest
+from pyspark.sql import functions as F
+
+from duckdb_gsheets_spark.operators.chunking import (
+    contamination_bloom,
+    contamination_ngram,
+)
+from duckdb_gsheets_spark.operators.curation import (
+    corpus_resample,
+    vocab_oov_rate,
+)
+from duckdb_gsheets_spark.operators.events import (
+    events_active_users,
+    events_error_share_daily,
+)
+from duckdb_gsheets_spark.operators.pipeline import pipeline_fineweb_corpus
+from duckdb_gsheets_spark.operators.skew import skew_heavy_hitters
+from duckdb_gsheets_spark.operators.text import gopher_rules
+from duckdb_gsheets_spark.plans.catalog import load_table
 from duckdb_gsheets_spark.streaming.events_stream import (
     batch_equivalent_hourly,
+    streaming_active_users,
+    streaming_bloom_gate,
+    streaming_contamination_counts,
     streaming_dedupe_count,
+    streaming_error_share_counts,
+    streaming_fineweb_gate_counts,
+    streaming_gopher_counts,
+    streaming_heavy_hitters,
     streaming_hourly_counts,
+    streaming_oov_counts,
+    streaming_resample_counts,
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def _kv(key, val):
+    """Row → one (key tuple, value tuple) pair over the named fields."""
+    return lambda r: [(tuple(r[k] for k in key), tuple(r[v] for v in val))]
+
+
+def _gopher_batch(spark, sf):
+    """The batch Gopher filter's per-(lang, passes) document counts."""
+    docs = load_table(spark, sf, "documents").where(F.col("text").isNotNull())
+    return (
+        gopher_rules(docs, carry=("lang",))
+        .groupBy("lang", "passes")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+    )
+
+
+def _active_users_long(r):
+    """Batch DAU/WAU/MAU columns → the stream's long (day, kind) rows."""
+    return [((r.day, k), (r[k],)) for k in ("dau", "wau", "mau")]
+
+
+def _error_share_long(r):
+    """Batch error-share columns → the stream's long (day, kind) rows;
+    days without errors have no error/user rows in the stream."""
+    kinds = ("n_events",) + (
+        ("n_errors", "n_users_affected") if r.n_errors else ()
+    )
+    return [((r.day, k), (r[k],)) for k in kinds]
+
+
+#: Stream twins whose drained sink must equal their batch query, as
+#: name → (stream twin, batch query, stream-row projection,
+#: batch-row projection (None: the same), non-degeneracy check on the
+#: projected stream result (None: none)).
+TWINS = {
+    "resample": (
+        streaming_resample_counts, corpus_resample,
+        _kv(("lang",), ("n_docs_kept", "n_tokens_kept")), None, None,
+    ),
+    "oov": (
+        streaming_oov_counts, vocab_oov_rate,
+        _kv(("lang",), ("n_tokens", "n_oov")), None,
+        lambda got: any(v[1] > 0 for v in got.values()),
+    ),
+    "contamination": (
+        streaming_contamination_counts, contamination_ngram,
+        _kv(("doc_id",), ("n_matched_ngrams",)), None, None,
+    ),
+    "active_users": (
+        streaming_active_users, events_active_users,
+        _kv(("day", "kind"), ("n_users",)), _active_users_long, None,
+    ),
+    "error_share": (
+        streaming_error_share_counts, events_error_share_daily,
+        _kv(("day", "kind"), ("n",)), _error_share_long, None,
+    ),
+    "heavy_hitters": (
+        streaming_heavy_hitters, skew_heavy_hitters,
+        _kv(("user_id",), ("n_events", "traffic_share")), None, None,
+    ),
+    "gopher": (
+        streaming_gopher_counts, _gopher_batch,
+        _kv(("lang", "passes"), ("n_docs",)), None,
+        lambda got: sum(v[0] for v in got.values()) > 0,
+    ),
+    "fineweb": (
+        streaming_fineweb_gate_counts, pipeline_fineweb_corpus,
+        _kv(("source",), ("n_docs", "n_pass_quality", "n_pass_c4")), None,
+        lambda got: len(got) > 1 and any(v[1] > 0 for v in got.values()),
+    ),
+    "bloom": (
+        streaming_bloom_gate, contamination_bloom,
+        _kv(("source",), ("n_docs_screened", "n_bloom_flagged")), None,
+        lambda got: sum(v[1] for v in got.values()) > 0,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(TWINS))
+def test_twin_matches_batch(spark, name):
+    """Each stream twin, drained over the same finite input, reports
+    exactly its batch query's keyed values (stream/batch unification
+    of the shared kernel), and the fixture exercises it."""
+    stream_fn, batch_fn, proj, batch_proj, nontrivial = TWINS[name]
+
+    def keyed(df, p):
+        return dict(kv for r in df.collect() for kv in p(r))
+
+    got = keyed(stream_fn(spark, SF), proj)
+    assert got == keyed(batch_fn(spark, SF), batch_proj or proj)
+    if nontrivial is not None:
+        assert nontrivial(got)
 
 
 def test_streaming_hourly_matches_batch(spark):
@@ -227,8 +348,6 @@ def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
     watermark) must NOT revise the already-emitted window."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
     src = tmp_path / "src"
     src.mkdir()
     ckpt = str(tmp_path / "ckpt")
@@ -286,103 +405,14 @@ def test_stream_dir_is_stable_per_sf_dir(spark):
     import os
     import tempfile
 
-    from duckdb_gsheets_spark.streaming.events_stream import read_events_stream
+    from duckdb_gsheets_spark.streaming.events_stream import read_table_stream
 
     sf_dir = "/root/testdata/sf0.001"
-    read_events_stream(spark, sf_dir)
-    read_events_stream(spark, sf_dir)
+    read_table_stream(spark, sf_dir, "events")
+    read_table_stream(spark, sf_dir, "events")
     digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     stream_dir = os.path.join(tempfile.gettempdir(), f"events_stream_{digest}")
     assert os.path.islink(os.path.join(stream_dir, "events.parquet"))
-
-
-def test_streaming_gopher_matches_batch(spark):
-    """The streaming quality gate must reproduce the batch Gopher
-    filter's per-language pass/fail counts exactly (stream/batch
-    unification of the same narrow rule projection)."""
-    from pyspark.sql import functions as F
-
-    from duckdb_gsheets_spark.operators.text import gopher_rules
-    from duckdb_gsheets_spark.plans.catalog import load_table
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_gopher_counts,
-    )
-
-    got = {
-        (r.lang, r.passes): r.n_docs
-        for r in streaming_gopher_counts(spark, SF).collect()
-    }
-    batch = gopher_rules(
-        load_table(spark, SF, "documents").where(F.col("text").isNotNull()),
-        carry=("lang",),
-    )
-    expected = {
-        (r.lang, r.passes): r.n_docs
-        for r in batch.groupBy("lang", "passes")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .collect()
-    }
-    assert got == expected
-    assert sum(got.values()) > 0
-
-
-def test_streaming_resample_matches_batch(spark):
-    """The streaming rebalancing gate must keep exactly the documents
-    the batch operator keeps (stateless deterministic filter)."""
-    from duckdb_gsheets_spark.operators.curation import corpus_resample
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_resample_counts,
-    )
-
-    got = {
-        r.lang: (r.n_docs_kept, r.n_tokens_kept)
-        for r in streaming_resample_counts(spark, SF).collect()
-    }
-    expected = {
-        r.lang: (r.n_docs_kept, r.n_tokens_kept)
-        for r in corpus_resample(spark, SF).collect()
-    }
-    assert got == expected
-
-
-def test_streaming_oov_matches_batch(spark):
-    """The streaming OOV gate (static vocab broadcast onto the
-    documents stream) must report exactly the batch operator's
-    per-language token/OOV counts."""
-    from duckdb_gsheets_spark.operators.curation import vocab_oov_rate
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_oov_counts,
-    )
-
-    got = {
-        r.lang: (r.n_tokens, r.n_oov)
-        for r in streaming_oov_counts(spark, SF).collect()
-    }
-    expected = {
-        r.lang: (r.n_tokens, r.n_oov)
-        for r in vocab_oov_rate(spark, SF).collect()
-    }
-    assert got == expected
-    assert any(n_oov > 0 for _, n_oov in got.values())
-
-
-def test_streaming_contamination_matches_batch(spark):
-    """Stream-static broadcast join + stateful dedup must reproduce
-    the batch contamination screen's distinct-gram counts."""
-    from duckdb_gsheets_spark.operators.chunking import contamination_ngram
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_contamination_counts,
-    )
-
-    got = {
-        r.doc_id: r.n_matched_ngrams
-        for r in streaming_contamination_counts(spark, SF).collect()
-    }
-    expected = {
-        r.doc_id: r.n_matched_ngrams
-        for r in contamination_ngram(spark, SF).collect()
-    }
-    assert got == expected
 
 
 def test_streaming_incremental_dedup_matches_batch(spark):
@@ -410,68 +440,6 @@ def test_streaming_incremental_dedup_matches_batch(spark):
             assert n_exact == n_matches and n_exact > 0
         else:
             assert n_exact == 0 and n_near == n_matches > 0
-
-
-def test_streaming_active_users_matches_batch(spark):
-    """The streaming DAU/WAU/MAU long-format counts must equal the
-    batch operator's pivoted columns for every reported day."""
-    from duckdb_gsheets_spark.operators.events import events_active_users
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_active_users,
-    )
-
-    got = {
-        (r.day, r.kind): r.n_users
-        for r in streaming_active_users(spark, SF).collect()
-    }
-    expected = {}
-    for r in events_active_users(spark, SF).collect():
-        expected[(r.day, "dau")] = r.dau
-        expected[(r.day, "wau")] = r.wau
-        expected[(r.day, "mau")] = r.mau
-    assert got == expected
-
-
-def test_streaming_error_share_matches_batch(spark):
-    """The streaming long-format reliability counts must equal the
-    batch error-share operator's columns for every day."""
-    from duckdb_gsheets_spark.operators.events import (
-        events_error_share_daily,
-    )
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_error_share_counts,
-    )
-
-    got = {
-        (r.day, r.kind): r.n
-        for r in streaming_error_share_counts(spark, SF).collect()
-    }
-    expected = {}
-    for r in events_error_share_daily(spark, SF).collect():
-        expected[(r.day, "n_events")] = r.n_events
-        if r.n_errors:
-            expected[(r.day, "n_errors")] = r.n_errors
-            expected[(r.day, "n_users_affected")] = r.n_users_affected
-    assert got == expected
-
-
-def test_streaming_heavy_hitters_matches_batch(spark):
-    """The streaming hot-key monitor must equal the batch heavy-hitter
-    report (modulo the batch rank column)."""
-    from duckdb_gsheets_spark.operators.skew import skew_heavy_hitters
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_heavy_hitters,
-    )
-
-    got = {
-        r.user_id: (r.n_events, r.traffic_share)
-        for r in streaming_heavy_hitters(spark, SF).collect()
-    }
-    expected = {
-        r.user_id: (r.n_events, r.traffic_share)
-        for r in skew_heavy_hitters(spark, SF).collect()
-    }
-    assert got == expected
 
 
 def test_streaming_conversion_lag_matches_batch(spark):
@@ -655,10 +623,8 @@ def test_streaming_dsir_weights_match_batch(spark):
     weight core's per-source rollup EXACTLY (same scaled-long sums —
     the per-row map-fold and the explode+join+rollup are the same
     integers), including the target-like count."""
-    from pyspark.sql import functions as F
 
     from duckdb_gsheets_spark.operators.curation import _dsir_weights
-    from duckdb_gsheets_spark.plans.catalog import load_table
     from duckdb_gsheets_spark.streaming.events_stream import (
         streaming_dsir_weight_counts,
     )
@@ -707,7 +673,6 @@ def test_streaming_dsir_scorer_checkpoint_resume(spark, tmp_path):
     import uuid
 
     from duckdb_gsheets_spark.operators.curation import _dsir_weights
-    from duckdb_gsheets_spark.plans.catalog import load_table
     from duckdb_gsheets_spark.streaming.events_stream import dsir_row_scorer
 
     docs = load_table(spark, SF, "documents")
@@ -793,8 +758,6 @@ def test_streaming_cdc_upsert_checkpoint_resume_orders_writes(
     import os
     import time
 
-    from pyspark.sql import functions as F
-
     from duckdb_gsheets_spark.streaming.events_stream import (
         cdc_merge_apply,
         streaming_corpus_upsert_state,
@@ -856,8 +819,6 @@ def test_cdc_merge_dedupes_multi_change_batches(spark, tmp_path):
     of fanning the full-outer merge out into duplicate doc_id rows."""
     import os
     import time
-
-    from pyspark.sql import functions as F
 
     from duckdb_gsheets_spark.streaming.events_stream import (
         cdc_merge_apply,
@@ -924,8 +885,6 @@ def test_cdc_merge_equal_mtime_numeric_sequence_wins(spark, tmp_path):
     lexicographic path order, which sorts change_10 before change_9."""
     import os
     import time
-
-    from pyspark.sql import functions as F
 
     from duckdb_gsheets_spark.streaming.events_stream import (
         cdc_merge_apply,
@@ -1178,17 +1137,16 @@ def test_dsir_bucket_llr_rejects_streaming_frame(spark):
     streaming feats frame must fail LOUDLY at build time, not deep in
     Catalyst analysis — the streaming scorer fits from the static
     corpus and broadcasts the collected table instead."""
-    import pytest
 
     from duckdb_gsheets_spark.operators.curation import (
         _dsir_feats,
         dsir_bucket_llr,
     )
     from duckdb_gsheets_spark.streaming.events_stream import (
-        read_documents_stream,
+        read_table_stream,
     )
 
-    stream_feats = _dsir_feats(read_documents_stream(spark, SF))
+    stream_feats = _dsir_feats(read_table_stream(spark, SF, "documents"))
     assert stream_feats.isStreaming
     with pytest.raises(ValueError, match="STATIC corpus only"):
         dsir_bucket_llr(stream_feats)
@@ -1281,31 +1239,6 @@ def test_streaming_ab_monitor_matches_batch_readout(spark):
     assert batch.mean_a == round(m_a, 6)
     assert batch.mean_b == round(m_b, 6)
     assert batch.welch_z == round(z, 6)
-
-
-def test_streaming_fineweb_gates_match_batch_funnel(spark):
-    """The streaming FineWeb intake gate must reproduce the batch
-    funnel's stage-1/2 ledger columns exactly (n_docs,
-    n_pass_quality, n_pass_c4 per source) — the dedup stage is
-    chained separately by design."""
-    from duckdb_gsheets_spark.operators.pipeline import (
-        pipeline_fineweb_corpus,
-    )
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_fineweb_gate_counts,
-    )
-
-    got = {
-        r.source: (r.n_docs, r.n_pass_quality, r.n_pass_c4)
-        for r in streaming_fineweb_gate_counts(spark, SF).collect()
-    }
-    batch = {
-        r.source: (r.n_docs, r.n_pass_quality, r.n_pass_c4)
-        for r in pipeline_fineweb_corpus(spark, SF).collect()
-    }
-    assert got == batch
-    assert len(got) > 1
-    assert any(v[1] > 0 for v in got.values())
 
 
 def test_streaming_exactsubstr_retention_matches_batch(spark):
@@ -1443,27 +1376,6 @@ def test_streaming_ivfpq_probe_matches_batch(spark):
     assert len(got) == 50
 
 
-def test_streaming_bloom_gate_matches_batch_audit(spark):
-    """The live intake gate must reproduce the batch audit's screen
-    columns exactly: same artifact (fit through the one shared
-    builder), same per-doc verdicts, same per-source counts."""
-    from duckdb_gsheets_spark.operators.chunking import contamination_bloom
-    from duckdb_gsheets_spark.streaming.events_stream import (
-        streaming_bloom_gate,
-    )
-
-    got = {
-        r.source: (r.n_docs_screened, r.n_bloom_flagged)
-        for r in streaming_bloom_gate(spark, SF).collect()
-    }
-    exp = {
-        r.source: (r.n_docs_screened, r.n_bloom_flagged)
-        for r in contamination_bloom(spark, SF).collect()
-    }
-    assert got == exp
-    assert sum(v[1] for v in got.values()) > 0  # gate is not degenerate
-
-
 def test_cdc_merge_mixed_flat_and_dir_layouts_order_by_set_number(
     spark, tmp_path
 ):
@@ -1476,8 +1388,6 @@ def test_cdc_merge_mixed_flat_and_dir_layouts_order_by_set_number(
     import os
     import shutil
     import time
-
-    from pyspark.sql import functions as F
 
     from duckdb_gsheets_spark.streaming.events_stream import (
         cdc_merge_apply,
@@ -1543,9 +1453,7 @@ def test_streaming_doremi_gate_matches_batch(spark):
     gate's semantics must hold: a domain whose epoch multiplier is
     >= 1 (under-represented vs its mixture weight) keeps EVERYTHING,
     while any down-sampled domain keeps a strict, nonzero subset."""
-    import pyspark.sql.functions as F
 
-    from duckdb_gsheets_spark.plans.catalog import load_table
     from duckdb_gsheets_spark.streaming.events_stream import (
         doremi_row_gate,
         streaming_doremi_gate,
@@ -1600,7 +1508,6 @@ def test_streaming_phash_gate_matches_batch(spark):
     signature must be bit-identical to the batch signature builder
     (formulation equivalence), and the fixture must actually flag a
     perceptual match within threshold."""
-    import pyspark.sql.functions as F
 
     from duckdb_gsheets_spark.operators.dedup import DELTA_SOURCE
     from duckdb_gsheets_spark.operators.multimodal import (
@@ -1610,7 +1517,6 @@ def test_streaming_phash_gate_matches_batch(spark):
         phash_row_signatures,
         phash_signatures,
     )
-    from duckdb_gsheets_spark.plans.catalog import load_table
     from duckdb_gsheets_spark.streaming.events_stream import (
         phash_gate_ledger,
         streaming_phash_gate,
@@ -1691,10 +1597,8 @@ def test_streaming_quality_survivor_gate_matches_batch(spark):
     slice, and the fixture must be non-degenerate — some arrivals
     kept (new fingerprints and/or incumbent-beating wins), the
     kept split exactly n_new_fp + n_wins."""
-    import pyspark.sql.functions as F
 
     from duckdb_gsheets_spark.operators.dedup import DELTA_SOURCE
-    from duckdb_gsheets_spark.plans.catalog import load_table
     from duckdb_gsheets_spark.streaming.events_stream import (
         quality_survivor_ledger,
         quality_survivor_scorer,
@@ -1744,10 +1648,8 @@ def test_streaming_quality_survivor_checkpoint_resume(spark, tmp_path):
     checkpoint, the second half lands, the SAME checkpoint resumes —
     only new arrivals append (no re-verdicts), and the final verdict
     set equals the batch gate on the full delta."""
-    import pyspark.sql.functions as F
 
     from duckdb_gsheets_spark.operators.dedup import DELTA_SOURCE
-    from duckdb_gsheets_spark.plans.catalog import load_table
     from duckdb_gsheets_spark.streaming.events_stream import (
         quality_survivor_scorer,
     )
