@@ -275,11 +275,13 @@ def _jaccard_pairs_from(toks_arr: DataFrame) -> DataFrame:
     # subtree (the round-14 first cut did exactly that and the plan
     # quadrupled). The frame is (1−t)·|postings| rows of 5 narrow
     # columns — index-sized, the same materialize-once pattern as
-    # _token_set_groups.
+    # _token_set_groups. The prefix bound carries the same 1e-9 nudge
+    # before ceil as α below: n·t landing a float ε above an exact
+    # integer must not shorten the prefix past a true pair.
     prefix = (
         postings.join(vocab, "tok")
         .withColumn("pos", F.row_number().over(w))
-        .where(F.col("pos") <= F.col("n_tokens") - F.ceil(F.col("n_tokens") * t) + 1)
+        .where(F.col("pos") <= F.col("n_tokens") - F.ceil(F.col("n_tokens") * t - 1e-9) + 1)
         .select("doc_id", "n_tokens", "tok", "pos", "df")
         .localCheckpoint(eager=True)
     )
@@ -333,10 +335,11 @@ def _jaccard_pairs_from(toks_arr: DataFrame) -> DataFrame:
     # .distinct() output — and everything downstream — is unchanged.
     filt = (
         (F.col("a.doc_id") < F.col("b.doc_id"))
-        # J ≥ t ⇒ the smaller set is ≥ t × the larger one.
+        # J ≥ t ⇒ the smaller set is ≥ t × the larger one (nudged
+        # like α: 25 · 0.56 is 14.000000000000002 in floats).
         & (
             F.least("a.n_tokens", "b.n_tokens")
-            >= F.greatest("a.n_tokens", "b.n_tokens") * t
+            >= F.greatest("a.n_tokens", "b.n_tokens") * t - 1e-9
         )
         & (ubound >= alpha)
     )
@@ -819,8 +822,10 @@ def _containment_pairs_from(toks_arr: DataFrame) -> DataFrame:
         .withColumn("pos", F.row_number().over(w))
         .localCheckpoint(eager=True)
     )
+    # The prefix bound is nudged like α below (the Jaccard core's
+    # prefix note).
     prefix = pos_df.where(
-        F.col("pos") <= F.col("n_tokens") - F.ceil(F.col("n_tokens") * t) + 1
+        F.col("pos") <= F.col("n_tokens") - F.ceil(F.col("n_tokens") * t - 1e-9) + 1
     ).select(
         F.col("doc_id").alias("doc_a"),
         F.col("n_tokens").alias("na"),

@@ -12,19 +12,22 @@ correctness is additionally pinned by pytest recomputation against
 numpy on the same data (tests/test_ops.py).
 
 Execution shape — the same one MLlib's ``KMeans``/``RowMatrix`` use
-(``treeAggregate``), expressed in DataFrame operators:
+(``treeAggregate``): work inside each partition, reduce only the small
+result. Every iteration of the three parameter-server loops
+(``kmeans_lloyd``, ``pca_power_topcomp``, ``logreg_probe``) is ONE
+Spark job through one kernel, :func:`_partial_sums`:
 
-* the corpus NEVER shuffles: per-iteration state flows corpus → tiny.
-  Assignment / projection is a narrow Arrow-batched numpy map (one
-  (batch × dim) @ (dim × k) GEMM per batch, zero corpus movement);
-* the update step is a ``groupBy`` over k clusters (or a global agg)
-  of per-dimension sums — map-side partial aggregation reduces each
-  partition to k × dim doubles before the shuffle, so the shuffled
-  bytes per iteration are O(partitions × k × dim), independent of
-  corpus size;
-* the k × dim result is collected to the driver (the only collect —
-  the model state, exactly what a parameter server would hold) and
-  re-broadcast into the next iteration's UDF closure.
+* the corpus NEVER shuffles: one ``mapInArrow`` pass over the
+  persisted ``emb`` frame runs the iteration's numpy step per Arrow
+  batch (one (batch × dim) @ (dim × k) GEMM, zero corpus movement)
+  and folds it, inside the partition, to one row per key — ``(key,
+  n, s array<bigint>)``, the exact scaled-long sums of that
+  partition's terms;
+* no exchange and no per-dimension aggregate plan: the driver
+  collects O(partitions × keys × (dim + 2)) longs per iteration —
+  the model state a parameter server would hold, independent of
+  corpus size — folds them in exact integer arithmetic and ships the
+  updated state in the next iteration's closure.
 
 At 100 TB with 1000 executors this iterates at scan speed; the driver
 traffic per iteration is kilobytes. ``.persist()`` on the parsed
@@ -40,7 +43,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
@@ -98,13 +102,26 @@ def _init_centroids(sf_dir: str, spark: SparkSession | None = None) -> np.ndarra
     return np.array([[float(x) for x in e] for _, e in rows])
 
 
-def _assign_sim_np(centroids: np.ndarray):
-    """pandas_udf: embedding → struct(cluster, sim): argmax cosine
-    against the broadcast centroid matrix, one GEMM per Arrow batch.
-    Ties resolve to the lowest cluster index; sims round to 6 decimals
-    before the argmax so float noise can't flip assignments between
-    runs (same contract as vectors.centroid_assign_np)."""
+def _assign_np(centroids: np.ndarray):
+    """``(batch × dim) matrix → (cluster, sim)``: argmax cosine against
+    the centroid matrix, one GEMM per Arrow batch. Ties resolve to the
+    lowest cluster index; sims round to 6 decimals before the argmax
+    so float noise can't flip assignments between runs (same contract
+    as vectors.centroid_assign_np)."""
     unit = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+
+    def assign(M: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+        sims = np.round((M @ unit.T) / norms[:, None], 6)
+        return sims.argmax(axis=1).astype("int64"), sims.max(axis=1)
+
+    return assign
+
+
+def _assign_sim_np(centroids: np.ndarray):
+    """pandas_udf: embedding → struct(cluster, sim) — :func:`_assign_np`
+    as a column expression, for the lazy cluster-blocked plans."""
+    assign_np = _assign_np(centroids)
 
     @pandas_udf(
         StructType(
@@ -117,13 +134,8 @@ def _assign_sim_np(centroids: np.ndarray):
     def assign(emb: pd.Series) -> pd.DataFrame:
         if len(emb) == 0:
             return pd.DataFrame({"cluster": [], "sim": []})
-        M = np.stack(emb.to_numpy())
-        norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-        sims = np.round((M @ unit.T) / norms[:, None], 6)
-        best = sims.argmax(axis=1)
-        return pd.DataFrame(
-            {"cluster": best.astype("int64"), "sim": sims.max(axis=1)}
-        )
+        cluster, sim = assign_np(np.stack(emb.to_numpy()))
+        return pd.DataFrame({"cluster": cluster, "sim": sim})
 
     return assign
 
@@ -136,20 +148,128 @@ def _assign_sim_np(centroids: np.ndarray):
 #: state never accumulates float drift. Long bound: |Σ x·1e6| < 2^63
 #: ⇒ ~9.2e12 in column units per group — comfortable through sf100;
 #: beyond that widen to DECIMAL (determinism.dsum_decimal shape).
+#: Past the bound every sum here RAISES, as ANSI ``sum(bigint)`` does.
 EMB_SCALE = 1_000_000
 
+_LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
 
-def _dim_scaled_sums(prefix: str = "emb", weight: Column | None = None) -> list:
-    """Exact scaled-long per-dimension sums: Σ round(term·1e6) as
-    long — the deterministic replacement for raw double sums in every
-    iterative update (same contract as determinism.dsum)."""
-    def term(d: int):
-        t = F.element_at(F.col(prefix), d + 1)
-        if weight is not None:
-            t = t * weight
-        return F.sum(F.round(t * EMB_SCALE).cast("long")).alias(f"s{d}")
 
-    return [term(d) for d in range(DIM)]
+def _dim_scaled_sums() -> list:
+    """Exact scaled-long per-dimension sums over the ``emb`` column:
+    Σ round(x·1e6) as long — the column-expression form of
+    :func:`_scaled_long`, for the lazy single-plan queries (same
+    contract as determinism.dsum)."""
+    return [
+        F.sum(
+            F.round(F.element_at(F.col("emb"), d + 1) * EMB_SCALE).cast("long")
+        ).alias(f"s{d}")
+        for d in range(DIM)
+    ]
+
+
+def _scaled_long(x: np.ndarray) -> np.ndarray:
+    """``cast(round(x * EMB_SCALE) as bigint)`` as Spark evaluates it
+    on doubles: one double product, HALF_UP (ties away from zero) on
+    the exact value — ``y − trunc(y)`` is exact, so there is no
+    ``+0.5`` carry to round wrongly — then an overflow-checked cast
+    that raises (NaN too), as ANSI does."""
+    y = x * float(EMB_SCALE)
+    t = np.trunc(y)
+    r = t + np.where(np.abs(y - t) >= 0.5, np.sign(y), 0.0)
+    if not np.all((r >= -(2.0**63)) & (r < 2.0**63)):
+        raise ArithmeticError("scaled term overflows bigint")
+    return r.astype(np.int64)
+
+
+def _exact_colsum(terms: np.ndarray) -> list[int]:
+    """Column sums of an int64 matrix as exact Python ints: numpy's
+    int64 sum when no running sum can leave the long range, Python
+    ints otherwise (numpy would wrap silently)."""
+    bound = float(np.abs(terms.astype(np.float64)).max(initial=0.0))
+    if bound * len(terms) < 2.0**62:
+        return [int(v) for v in terms.sum(axis=0)]
+    return [sum(map(int, col)) for col in terms.T]
+
+
+def _fold(acc: dict, key: int, n: int, sums) -> None:
+    """Add one ``(n, sums)`` partial into ``acc[key]``, in Python ints."""
+    n0, s0 = acc.get(key, (0, [0] * len(sums)))
+    acc[key] = (n0 + n, [a + b for a, b in zip(s0, sums)])
+
+
+def _check_long(acc: dict) -> None:
+    for _, sums in acc.values():
+        if not all(_LONG_MIN <= v <= _LONG_MAX for v in sums):
+            raise ArithmeticError("scaled sum overflows bigint")
+
+
+def _emb_matrix(batch: pa.RecordBatch) -> np.ndarray:
+    """The batch's ``emb`` list column as a (rows × dim) float64
+    matrix — one zero-copy view of the flattened values."""
+    col = batch.column("emb")
+    return col.flatten().to_numpy().reshape(len(col), -1)
+
+
+def _partial_sums(frame: DataFrame, step) -> dict[int, tuple[int, list[int]]]:
+    """THE per-iteration action of the parameter-server loops: one
+    ``mapInArrow`` job, no exchange.
+
+    ``step(batch) -> (keys, terms)`` is the iteration's numpy step on
+    one Arrow batch: an int64 key per row and a (rows × w) float64
+    term matrix. Each partition folds its batches to one row per key
+    — ``(key, n, s)`` with ``s[j] = Σ _scaled_long(terms[:, j])`` —
+    and the driver folds those partial rows in Python ints. Returns
+    ``{key: (n, s)}`` for every key with members; empty partitions
+    emit nothing. Every sum is exact and partition-order-independent
+    (bit-equal to Spark's ``sum(cast(round(t * 1e6) as bigint))``),
+    and any term, partition sum or total outside the long range
+    raises ArithmeticError, as ANSI ``sum(bigint)`` does."""
+
+    def partials(batches):
+        acc: dict = {}
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            keys, terms = step(batch)
+            scaled = _scaled_long(terms)
+            for k in np.unique(keys).tolist():
+                rows = keys == k
+                _fold(acc, k, int(rows.sum()), _exact_colsum(scaled[rows]))
+        _check_long(acc)
+        if acc:
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "key": list(acc),
+                    "n": [n for n, _ in acc.values()],
+                    "s": [s for _, s in acc.values()],
+                }
+            )
+
+    out: dict = {}
+    for r in frame.mapInArrow(partials, "key long, n long, s array<long>").collect():
+        _fold(out, r.key, r.n, r.s)
+    _check_long(out)
+    return out
+
+
+def _lloyd_update(emb: DataFrame, centroids: np.ndarray) -> np.ndarray:
+    """One Lloyd iteration over a persisted ``(emb)`` frame: assign,
+    sum each cluster's members in one :func:`_partial_sums` job, and
+    move every non-empty cluster to its mean. An empty cluster keeps
+    its old centroid (the oracle's COALESCE carry-through)."""
+    assign = _assign_np(centroids)
+
+    def step(batch):
+        M = _emb_matrix(batch)
+        return assign(M)[0], M
+
+    new = centroids.copy()
+    for k, (n, s) in _partial_sums(emb, step).items():
+        # Exact longs / (n·scale): the new centroid is two
+        # correctly-rounded ops away from integers — bit-equal to the
+        # oracle's CAST(s AS DOUBLE)/(n*1e6).
+        new[k] = np.array(s, dtype=np.float64) / (n * float(EMB_SCALE))
+    return new
 
 
 def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,9 +278,11 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     returning one row per cluster (size, mean member cosine to the
     final centroid, centroid norm).
 
-    Per iteration: narrow GEMM assignment (zero corpus shuffle) →
-    64-sum groupBy over K clusters (map-side combined) → K × 64
-    driver collect → next closure. The returned 8-row frame is
+    Per iteration ONE job (:func:`_lloyd_update`): a partition-local
+    GEMM assignment folded to K partial ``(cluster, n, Σ x·1e6)`` rows
+    per partition, collected and summed on the driver into the next
+    closure's K × 64 centroids. The final stats pass is one more
+    :func:`_partial_sums` job. The returned 8-row frame is
     driver-materialized, exactly like a fitted model's summary.
 
     Oracle-checked since round 3: the centroid state is EXACT
@@ -172,58 +294,38 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by numpy recomputation in pytest.
     """
     centroids = _init_centroids(sf_dir, spark)
-    # No fan_out: parameter-server loops pay per-TASK Python-UDF
-    # round-trip overhead EVERY iteration, so widening a tiny frame
-    # to core-count partitions triples the per-iteration wall
-    # (measured 6.2 vs 2.1 s/iter at sf0.1). The scan's own
+    # No fan_out: parameter-server loops pay per-TASK Python worker
+    # overhead EVERY iteration, so widening a tiny frame to core-count
+    # partitions multiplies the per-iteration wall. The scan's own
     # partitioning is the scale-adaptive width — at 100 TB the file
     # splits already exceed core count. Exact-long partial sums are
     # partition-count invariant, so results are unchanged.
     emb = (
         load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", to_double(F.col("embedding")).alias("emb"))
+        .select(to_double(F.col("embedding")).alias("emb"))
         .persist()
     )
     try:
         for _ in range(KMEANS_ITERS):
-            assigned = emb.withColumn("a", _assign_sim_np(centroids)("emb"))
-            rows = (
-                assigned.groupBy(F.col("a.cluster").alias("cluster"))
-                .agg(F.count(F.lit(1)).alias("n"), *_dim_scaled_sums())
-                .collect()
-            )
-            new = centroids.copy()
-            for r in rows:
-                # Exact longs / (n·scale): the new centroid is two
-                # correctly-rounded ops away from integers — bit-equal
-                # to the oracle's CAST(s AS DOUBLE)/(n*1e6).
-                new[r.cluster] = np.array(
-                    [r[f"s{d}"] for d in range(DIM)], dtype=np.float64
-                ) / (r.n * float(EMB_SCALE))
-            centroids = new
-        final = emb.withColumn("a", _assign_sim_np(centroids)("emb"))
-        stats = (
-            final.groupBy(F.col("a.cluster").alias("cluster"))
-            .agg(
-                F.count(F.lit(1)).alias("size"),
-                # Exact integer sum of the 6-decimal-rounded sims:
-                # deterministic under any partition order.
-                F.sum(
-                    F.round(F.col("a.sim") * 1e6).cast("long")
-                ).alias("sim_scaled"),
-            )
-            .collect()
-        )
+            centroids = _lloyd_update(emb, centroids)
+        assign = _assign_np(centroids)
+
+        def stats_step(batch):
+            cluster, sim = assign(_emb_matrix(batch))
+            # Exact integer sum of the 6-decimal-rounded sims.
+            return cluster, sim[:, None]
+
+        stats = _partial_sums(emb, stats_step)
     finally:
         emb.unpersist()
     out = [
         (
-            int(r.cluster),
-            int(r.size),
-            round_half_away(r.sim_scaled / 1e6 / r.size, 6),
-            round_half_away(float(np.linalg.norm(centroids[r.cluster])), 6),
+            k,
+            n,
+            round_half_away(s[0] / 1e6 / n, 6),
+            round_half_away(float(np.linalg.norm(centroids[k])), 6),
         )
-        for r in sorted(stats, key=lambda r: r.cluster)
+        for k, (n, s) in sorted(stats.items())
     ]
     return spark.createDataFrame(
         out,
@@ -231,29 +333,15 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _proj_np(m: np.ndarray, v: np.ndarray):
-    """pandas_udf: embedding → centered projection ``(x−m)·v``, one
-    GEMV per Arrow batch with the iteration state in the closure."""
-
-    @pandas_udf(DoubleType())
-    def proj(e: pd.Series) -> pd.Series:
-        if len(e) == 0:
-            return pd.Series([], dtype="float64")
-        M = np.stack(e.to_numpy())
-        return pd.Series((M - m) @ v)
-
-    return proj
-
-
 def pca_power_topcomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the embedding corpus by power
     iteration on the (never materialized) covariance matrix:
     ``v ← normalize(Σᵢ (xᵢ−m)((xᵢ−m)·v))``.
 
-    Each iteration is one pass: a narrow Arrow-batched projection
-    ``s = (x−m)·v`` (closure-shipped m, v) followed by a single global
-    aggregate of 64 map-side-combined sums ``Σ s·(x_d−m_d)`` — the
-    matrix-free C·v product. Driver state is two 64-vectors.
+    One :func:`_partial_sums` job for the exact mean, then one per
+    iteration: each partition projects ``s = (x−m)·v`` (closure-shipped
+    m, v) and folds the 64 sums ``Σ s·(x_d−m_d)`` — the matrix-free
+    C·v product — to one partial row. Driver state is two 64-vectors.
 
     Output: 64 rows (dim, loading, eigenvalue), sign-fixed so the
     largest-magnitude loading is positive. Oracle-checked since
@@ -271,36 +359,22 @@ def pca_power_topcomp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     try:
-        mrow = emb.agg(
-            F.count(F.lit(1)).alias("n"), *_dim_scaled_sums()
-        ).collect()[0]
-        n = mrow.n
+        def mean_step(batch):
+            M = _emb_matrix(batch)
+            return np.zeros(len(M), dtype=np.int64), M
+
+        n, s = _partial_sums(emb, mean_step)[0]
         # Exact scaled-long mean — bit-equal to the oracle's replay.
-        m = np.array(
-            [mrow[f"s{d}"] for d in range(DIM)], dtype=np.float64
-        ) / (n * float(EMB_SCALE))
+        m = np.array(s, dtype=np.float64) / (n * float(EMB_SCALE))
         v = np.ones(DIM) / np.sqrt(DIM)
-        # Round 14: the 64 per-dimension sums are built as ONE
-        # selectExpr string batch instead of nested Column objects —
-        # each iteration re-plans, and composing 64 round/cast trees
-        # object-by-object cost ~1 s of py4j round-trips PER
-        # ITERATION (measured 1.4 vs 0.55 s/iter, values identical;
-        # m is loop-invariant so the strings build once). Same SQL
-        # semantics: round() is F.round, bigint is long.
-        proj_exprs = [
-            f"sum(cast(round(s * (element_at(emb, {d + 1}) - "
-            f"{float(m[d])!r}) * {EMB_SCALE}) as bigint)) as s{d}"
-            for d in range(DIM)
-        ]
         for _ in range(PCA_ITERS):
-            zrow = (
-                emb.withColumn("s", _proj_np(m, v)("emb"))
-                .selectExpr(*proj_exprs)
-                .collect()[0]
-            )
-            z = np.array(
-                [zrow[f"s{d}"] for d in range(DIM)], dtype=np.float64
-            ) / float(EMB_SCALE)
+            def proj_step(batch, v=v):
+                C = _emb_matrix(batch) - m
+                # (s·(x_d − m_d))·1e6: the oracle's operation order.
+                return np.zeros(len(C), dtype=np.int64), (C @ v)[:, None] * C
+
+            _, zs = _partial_sums(emb, proj_step)[0]
+            z = np.array(zs, dtype=np.float64) / float(EMB_SCALE)
             eigenvalue = float(np.linalg.norm(z)) / n
             v = z / np.linalg.norm(z)
     finally:
@@ -391,32 +465,9 @@ LOGREG_ITERS = 5
 LOGREG_LR = 2.0
 
 
-def _resid_np(w: np.ndarray, b: float):
-    """pandas_udf: (embedding, y) → σ(x·w + b) − y, one GEMV per
-    Arrow batch with the weight vector in the closure."""
-
-    @pandas_udf(DoubleType())
-    def resid(emb: pd.Series, y: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype="float64")
-        M = np.stack(emb.to_numpy())
-        p = 1.0 / (1.0 + np.exp(-(M @ w + b)))
-        return pd.Series(p - y.to_numpy())
-
-    return resid
-
-
-def _prob_np(w: np.ndarray, b: float):
-    """pandas_udf: embedding → σ(x·w + b)."""
-
-    @pandas_udf(DoubleType())
-    def prob(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype="float64")
-        M = np.stack(emb.to_numpy())
-        return pd.Series(1.0 / (1.0 + np.exp(-(M @ w + b))))
-
-    return prob
+def _sigmoid_np(M: np.ndarray, w: np.ndarray, b: float) -> np.ndarray:
+    """σ(x·w + b) per row, one GEMV per Arrow batch."""
+    return 1.0 / (1.0 + np.exp(-(M @ w + b)))
 
 
 def logreg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,13 +476,13 @@ def logreg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the confusion matrix with mean predicted probability per cell.
 
     Same parameter-server shape as :func:`kmeans_lloyd`: per
-    iteration, a narrow Arrow-batched GEMV computes residuals (zero
-    corpus movement), then ONE global aggregate of 65 map-side-combined
-    partial sums (Σ rᵢ·xᵢ per dimension + Σ rᵢ for the bias) ships
-    O(partitions × dim) doubles to the driver, which applies the
-    update and re-broadcasts the weights into the next closure. At
-    100 TB each iteration is a scan-speed pass; driver traffic is
-    kilobytes.
+    iteration ONE :func:`_partial_sums` job — each partition computes
+    residuals ``r = σ(x·w + b) − y`` with a GEMV (zero corpus
+    movement) and folds the 65 sums (Σ rᵢ·xᵢ per dimension + Σ rᵢ for
+    the bias) plus its row count to one partial row; the driver
+    applies the update and ships the weights in the next closure. The
+    confusion matrix is one more job, keyed by cell. At 100 TB each
+    iteration is a scan-speed pass; driver traffic is kilobytes.
 
     Oracle-checked since round 3: gradients accumulate as exact
     scaled longs, so the weight trajectory is bit-identical across
@@ -445,62 +496,49 @@ def logreg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .select(
-            "vec_id",
             (F.col("label") % 2).cast("double").alias("y"),
             to_double(F.col("embedding")).alias("emb"),
         )
         .persist()
     )
     try:
-        n = emb.count()
         w = np.zeros(DIM)
         b = 0.0
-        denom = n * float(EMB_SCALE)
-        # String-built gradient aggregate — the pca_power_topcomp
-        # py4j-chatter note; identical SQL semantics.
-        grad_exprs = [
-            f"sum(cast(round(r * {EMB_SCALE}) as bigint)) as gb"
-        ] + [
-            f"sum(cast(round((element_at(emb, {d + 1}) * r) * "
-            f"{EMB_SCALE}) as bigint)) as s{d}"
-            for d in range(DIM)
-        ]
         for _ in range(LOGREG_ITERS):
-            scored = emb.withColumn(
-                "r", _resid_np(w, b)(F.col("emb"), F.col("y"))
-            )
-            row = scored.selectExpr(*grad_exprs).collect()[0]
+            def grad_step(batch, w=w, b=b):
+                M = _emb_matrix(batch)
+                r = _sigmoid_np(M, w, b) - batch.column("y").to_numpy()
+                # (x_d·r)·1e6 per dimension (the oracle's order), then
+                # r·1e6 for the bias.
+                return (
+                    np.zeros(len(M), dtype=np.int64),
+                    np.hstack([M * r[:, None], r[:, None]]),
+                )
+
+            sums = _partial_sums(emb, grad_step)
+            if not sums:  # empty corpus: no gradient, no confusion cells
+                break
+            n, g = sums[0]
+            denom = n * float(EMB_SCALE)
             # Exact scaled-long gradient state; ×2 and the single
             # division are correctly rounded, so w/b are bit-equal to
             # the oracle's replay.
-            w = w - LOGREG_LR * np.array(
-                [row[f"s{d}"] for d in range(DIM)], dtype=np.float64
-            ) / denom
-            b = b - LOGREG_LR * float(row.gb) / denom
-        final = emb.withColumn("p", _prob_np(w, b)(F.col("emb")))
-        cells = (
-            final.groupBy(
-                F.col("y").cast("long").alias("y_true"),
-                (F.col("p") >= 0.5).cast("long").alias("y_pred"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                # Exact integer sum of 6-decimal-rounded probabilities:
-                # partition-order independent.
-                F.sum(F.round(F.col("p") * 1e6).cast("long")).alias("ps"),
-            )
-            .collect()
-        )
+            w = w - LOGREG_LR * np.array(g[:DIM], dtype=np.float64) / denom
+            b = b - LOGREG_LR * float(g[DIM]) / denom
+
+        def cell_step(batch):
+            p = _sigmoid_np(_emb_matrix(batch), w, b)
+            y = batch.column("y").to_numpy().astype(np.int64)
+            # Cell key 2·y_true + y_pred; exact integer sum of the
+            # 6-decimal-rounded probabilities.
+            return 2 * y + (p >= 0.5), p[:, None]
+
+        cells = _partial_sums(emb, cell_step)
     finally:
         emb.unpersist()
     out = [
-        (
-            int(c.y_true),
-            int(c.y_pred),
-            int(c.n),
-            round_half_away(c.ps / 1e6 / c.n, 6),
-        )
-        for c in sorted(cells, key=lambda c: (c.y_true, c.y_pred))
+        (*divmod(k, 2), n, round_half_away(s[0] / 1e6 / n, 6))
+        for k, (n, s) in sorted(cells.items())
     ]
     return spark.createDataFrame(
         out, "y_true long, y_pred long, n long, avg_prob double"

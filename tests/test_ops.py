@@ -3296,6 +3296,97 @@ def test_pca_matches_numpy_recompute(spark):
     assert abs(eig - float(v @ C @ v)) < 0.1 * w[-1]
 
 
+def test_kmeans_pca_logreg_partial_sum_kernel_edges(spark):
+    """The partition-local partial-sum kernel the three parameter-
+    server loops share must keep Spark's ``sum(cast(round(x * 1e6) as
+    bigint))`` semantics exactly: HALF_UP ties, -0.0, values near
+    2^52, empty partitions, the empty-cluster carry-through, and an
+    ANSI overflow that raises instead of wrapping."""
+    import numpy as np
+    from pyspark.errors import PythonException
+
+    from duckdb_gsheets_spark.functions.vectors import to_double
+    from duckdb_gsheets_spark.operators.ml import (
+        _dim_scaled_sums,
+        _emb_matrix,
+        _lloyd_update,
+        _partial_sums,
+        _scaled_long,
+    )
+    from duckdb_gsheets_spark.plans.catalog import load_table
+
+    # Rounding helper vs Spark, element for element. j/128 makes
+    # x·1e6 = 7812.5·j an exact .5 tie; j = 576460751 puts that tie
+    # just below 2^52.
+    ties = [j / 128 for j in (1, -1, 3, -3, 5, 576460751, -576460751)]
+    near = [4503599627.370496, -4503599627.370497, 9.2e12, -9.2e12]
+    half = [float(np.nextafter(0.5, 0.0)) / 1e6, -float(np.nextafter(0.5, 0.0)) / 1e6]
+    rng = np.random.default_rng(7)
+    noise = (rng.normal(size=64) * 10.0 ** rng.integers(-9, 6, 64)).tolist()
+    xs = ties + near + half + noise + [0.0, -0.0, 2.5e-6, -2.5e-6]
+    got = _scaled_long(np.array(xs)).tolist()
+    want = [
+        r.v
+        for r in spark.createDataFrame(
+            list(enumerate(xs)), "i long, x double"
+        )
+        .selectExpr("i", "cast(round(x * 1000000) as bigint) AS v")
+        .orderBy("i")
+        .collect()
+    ]
+    assert got == want
+
+    def sums_step(batch):
+        M = _emb_matrix(batch)
+        return np.zeros(len(M), dtype=np.int64), M
+
+    # The kernel equals Spark's own per-dimension aggregate on the
+    # corpus — the reduction it replaces in the three loops.
+    emb = load_table(spark, SF, "embeddings").select(
+        to_double(F.col("embedding")).alias("emb")
+    )
+    ref = emb.agg(F.count(F.lit(1)).alias("n"), *_dim_scaled_sums()).first()
+    n, s = _partial_sums(emb, sums_step)[0]
+    assert (n, s) == (ref.n, [ref[f"s{d}"] for d in range(len(s))])
+
+    # Empty partitions: 5 rows over 8 partitions emit nothing extra.
+    five = spark.createDataFrame(
+        [([float(i), -0.5 * i, i / 128],) for i in range(5)], "emb array<double>"
+    )
+    one = _partial_sums(five.coalesce(1), sums_step)
+    assert _partial_sums(five.repartition(8), sums_step) == one
+    # 7812.5·i ties round away from zero: 0 + 7813 + 15625 + 23438 + 31250.
+    assert one == {0: (5, [10_000_000, -5_000_000, 78_126])}
+
+    # A cluster nobody joins keeps its centroid; the others move to
+    # their exact member means.
+    pts = spark.createDataFrame(
+        [([1.0, 0.25, 0.0],), ([1.0, -0.25, 0.0],), ([0.0, 1.0, 0.0],)],
+        "emb array<double>",
+    ).repartition(3)
+    cents = np.eye(3)
+    new = _lloyd_update(pts, cents)
+    assert new.tolist() == [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+
+    # Overflow raises, inside a partition and in the driver fold, as
+    # Spark's ANSI sum does on the same rows.
+    big = [([9e12],), ([9e12],)]
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        spark.createDataFrame(big, "emb array<double>").agg(
+            F.sum(F.round(F.col("emb")[0] * 1000000).cast("long"))
+        ).collect()
+    with pytest.raises(PythonException, match="overflows bigint"):
+        _partial_sums(
+            spark.createDataFrame(big, "emb array<double>").coalesce(1),
+            sums_step,
+        )
+    split = spark.sparkContext.parallelize(big, 2).toDF("emb array<double>")
+    with pytest.raises(ArithmeticError, match="overflows bigint"):
+        _partial_sums(split, sums_step)
+    with pytest.raises(ArithmeticError):
+        _scaled_long(np.array([1e13]))
+
+
 def test_mix_weights_temperature_flattens(spark):
     from duckdb_gsheets_spark.operators.curation import corpus_mix_weights
 

@@ -3,6 +3,8 @@ promises (pushdown, pruning, broadcasts, no stray cross joins, no
 unpartitioned corpus-sized windows) pinned as tests so a refactor
 can't silently regress them."""
 
+import pytest
+
 from duckdb_gsheets_spark.operators import all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -1623,3 +1625,32 @@ def test_whitespace_split_lives_only_in_functions_text():
     ]
     assert any(s.startswith("functions/text.py:") for s in sites)
     assert [s for s in sites if not s.startswith("functions/text.py:")] == []
+
+
+@pytest.mark.parametrize(
+    "name, iters",
+    [
+        ("kmeans_lloyd", "KMEANS_ITERS"),
+        ("pca_power_topcomp", "PCA_ITERS"),
+        ("logreg_probe", "LOGREG_ITERS"),
+    ],
+)
+def test_parameter_server_loops_run_one_job_per_iteration(spark, name, iters):
+    """Each iteration of the three driver-assembled ML loops is ONE
+    build job (the partition-local partial-sum kernel), plus at most
+    two more (the parquet footer read and the final pass). A return
+    to per-iteration groupBy/aggregate shuffles — two jobs per
+    iteration — fails here."""
+    from duckdb_gsheets_spark.operators import ml
+
+    sc = spark.sparkContext
+    group = f"build-jobs-{name}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        all_queries()[name].spark_fn(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # The status store fills asynchronously from the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= getattr(ml, iters) + 2

@@ -13,7 +13,7 @@ scale but that example-based tests can only sample.
 
 from decimal import Decimal
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from duckdb_gsheets_spark.operators.determinism import dsum
 from duckdb_gsheets_spark.sources.gsheets.a1 import (
@@ -309,3 +309,70 @@ def test_zvalue_matches_reference_and_is_injective(spark, pairs):
         assert _py_morton([x0 + 1, y0], 8) > _py_morton([x0, y0], 8)
     if y0 < 255:
         assert _py_morton([x0, y0 + 1], 8) > _py_morton([x0, y0], 8)
+
+
+#: (t, n) with n·t an exact integer in reals: the first three land a
+#: float ε ABOVE that integer (25 · 0.56 = 14.000000000000002), the
+#: rest exactly on it.
+_EXACT_PRODUCTS = [
+    (0.56, 25), (0.28, 25), (0.14, 50), (0.75, 8), (0.8, 10), (0.5, 6),
+]
+
+
+@st.composite
+def _boundary_corpus(draw):
+    """A token-set corpus with a pair AT the threshold: A holds n
+    tokens and B holds exactly k = n·t of them (plus, sometimes,
+    tokens A lacks), so C(A→B) = t and, when B ⊂ A, J(A, B) = t too;
+    a few random sets ride along."""
+    t, n = draw(st.sampled_from(_EXACT_PRODUCTS))
+    k = round(n * t)
+    a = set(range(n))
+    shared = draw(st.sets(st.sampled_from(sorted(a)), min_size=k, max_size=k))
+    extra = draw(st.one_of(st.just(set()), st.sets(st.integers(60, 70), max_size=4)))
+    others = draw(
+        st.lists(st.sets(st.integers(0, 70), min_size=1, max_size=n), max_size=3)
+    )
+    return t, [a, shared | extra, *others]
+
+
+def _brute_force_pairs(sets, measure, t):
+    """Exact pair sets by brute force, rounded as the Spark verify
+    rounds (round-6 half-up) before the ``≥ t`` comparison."""
+    from duckdb_gsheets_spark.operators.determinism import round_half_away
+
+    return {
+        (i, j)
+        for i, a in enumerate(sets)
+        for j, b in enumerate(sets)
+        if i != j and round_half_away(measure(a, b), 6) >= t
+    }
+
+
+@settings(max_examples=8, deadline=None)
+@example(case=(0.56, [set(range(25)), set(range(14))]))
+@given(case=_boundary_corpus())
+def test_ppjoin_cores_match_brute_force(spark, case):
+    """Both PPJoin cores (prefix + length + positional filters, then
+    the exact verify) return exactly the brute-force Jaccard /
+    containment pair sets, including pairs sitting exactly on the
+    threshold where ``n·t`` is an integer that floats overshoot."""
+    from unittest import mock
+
+    from duckdb_gsheets_spark.operators import dedup
+
+    t, sets = case
+    toks_arr = spark.createDataFrame(
+        [(i, sorted(f"t{x:02d}" for x in s), len(s)) for i, s in enumerate(sets)],
+        "doc_id long, toks array<string>, n_tokens int",
+    )
+    with mock.patch.object(dedup, "NGRAM_JACCARD_THRESHOLD", t):
+        jac = {(r.doc_a, r.doc_b) for r in dedup._jaccard_pairs_from(toks_arr).collect()}
+    with mock.patch.object(dedup, "CONTAINMENT_THRESHOLD", t):
+        con = {
+            (r.doc_a, r.doc_b)
+            for r in dedup._containment_pairs_from(toks_arr).collect()
+        }
+    want_jac = _brute_force_pairs(sets, lambda a, b: len(a & b) / len(a | b), t)
+    assert jac == {(i, j) for i, j in want_jac if i < j}
+    assert con == _brute_force_pairs(sets, lambda a, b: len(a & b) / len(a), t)
