@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from duckdb_gsheets_spark.functions import text as T
 from duckdb_gsheets_spark.operators.registry import QueryDef
+from duckdb_gsheets_spark.operators.windows import prefix_scan
 from duckdb_gsheets_spark.plans.catalog import load_table
 
 #: Sampling temperature for corpus mixing (mT5 uses α = 0.3).
@@ -382,69 +383,15 @@ def lang_tercile_ranked(scored: DataFrame) -> DataFrame:
     Bucket rule: ``tercile = ((rank−1)·3) div n_lang`` over the
     per-language (xent, doc_id) rank — exact integer math, identical
     in both engines (deliberately NOT SQL NTILE, whose remainder
-    distribution differs). The rank rides the grouped distributed
-    prefix-sum tiling (see :func:`quality_rank_ensemble`): one
-    range-partition on (lang, xent, doc_id), per-(lang, pid) counts,
-    offsets via a bounded |langs|×|pids|-row window broadcast back —
-    no language ever funnels through a single window task.
+    distribution differs). The per-language rank and count come from
+    :func:`~duckdb_gsheets_spark.operators.windows.prefix_scan`.
     """
-    ranged = (
-        scored.repartitionByRange("lang", "unigram_xent", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_off = (
-        Window.partitionBy("lang")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # ONE pass over the checkpoint yields BOTH per-(lang, pid) rank
-    # offsets (exclusive prefix sum) and the per-language total (full
-    # partition sum): the two windows share the lang hash partition,
-    # so Catalyst plans a single exchange — vs. the former separate
-    # n_lang aggregate, which re-read the checkpoint and shipped a
-    # second broadcast (two extra jobs per caller, pure scheduling
-    # floor at bench scale).
-    w_tot = Window.partitionBy("lang")
-    offsets = (
-        ranged.groupBy("lang", "pid")
-        .agg(F.count(F.lit(1)).alias("pcnt"))
-        .select(
-            "lang",
-            "pid",
-            F.coalesce(
-                F.sum("pcnt").over(w_off), F.lit(0).cast("long")
-            ).alias("rank_off"),
-            F.sum("pcnt").over(w_tot).alias("n_lang"),
-        )
-    )
-    w_local = Window.partitionBy("lang", "pid").orderBy(
-        "unigram_xent", "doc_id"
-    )
-    return (
-        ranged.join(F.broadcast(offsets), ["lang", "pid"])
-        .select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            "unigram_xent",
-            (
-                (
-                    F.col("rank_off")
-                    + F.row_number().over(w_local)
-                    - F.lit(1)
-                )
-                * 3
-            ).alias("rank3"),
-            "n_lang",
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            "unigram_xent",
-            F.expr("rank3 div n_lang").alias("tercile"),
-        )
+    return prefix_scan(scored, ["unigram_xent", "doc_id"], by=["lang"]).select(
+        "doc_id",
+        "lang",
+        "n_tokens",
+        "unigram_xent",
+        F.expr("((rank - 1) * 3) div n_total").alias("tercile"),
     )
 
 
@@ -464,15 +411,10 @@ def quality_lang_tertiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a doc_id tiebreak, so a sub-grid cross-engine ln() wobble
     cannot reorder rows.
 
-    Shapes, sized for 100 TB: the per-language rank uses the
-    distributed prefix-sum tiling generalized to a group key
-    (:func:`quality_rank_ensemble`): one range-partition on
-    (lang, xent, doc_id), per-(lang, pid) counts, offsets via a
-    bounded |langs|×|pids|-row window broadcast back — no
-    language ever funnels through a single window task (a
-    ``Window.partitionBy(lang)`` with a handful of languages would
-    be exactly the corpus-sized window the plan sweep forbids). The
-    final rollup is |langs|×3 rows.
+    Shapes, sized for 100 TB: the per-language rank comes from
+    :func:`~duckdb_gsheets_spark.operators.windows.prefix_scan`
+    grouped by language (:func:`lang_tercile_ranked`). The final
+    rollup is |langs|×3 rows.
     """
     scored = _doc_xent(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", "n_tokens", "unigram_xent"
@@ -1012,19 +954,10 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency-built vocab stops paying for itself.
 
     Shapes: one map-side-combined token count (the only corpus-wide
-    pass), then a DISTRIBUTED PREFIX-SUM rank/cumulate over the
-    distinct-token table (same tiling as orders_pareto_share /
-    window_ntile): range-partition by descending count, rank and
-    cumulate within each partition in parallel windows, and add
-    per-partition (row-count, token-sum) offsets from a bounded
-    |partitions|-row window broadcast back onto the stream — a
-    web-scale vocabulary (billions of distinct tokens) never funnels
-    through one task. The grand totals ride the same offsets
-    broadcast, so there is no separate 1-row cross join. The
-    range-partitioned table is localCheckpoint'ed (eager) so both
-    consumers read ONE pid assignment; blocks are
-    ContextCleaner-freed with the frame. Coverage shares are one
-    rounded division over exact integer sums.
+    pass), then :func:`~duckdb_gsheets_spark.operators.windows.prefix_scan`
+    over the distinct-token table for the frequency rank, the running
+    token count and both totals. Coverage shares are one rounded
+    division over exact integer sums.
     """
     docs = _doc_tokens(load_table(spark, sf_dir, "documents"))
     counts = (
@@ -1032,47 +965,12 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    ranged = (
-        counts.repartitionByRange(F.desc("cnt"), "tok")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = (
-        ranged.groupBy("pid")
-        .agg(
-            F.count(F.lit(1)).alias("pcnt"),
-            F.sum("cnt").alias("ptok"),
-        )
-        .select(
-            "pid",
-            F.coalesce(F.sum("pcnt").over(w_off), F.lit(0).cast("long")).alias(
-                "rank_off"
-            ),
-            F.coalesce(F.sum("ptok").over(w_off), F.lit(0).cast("long")).alias(
-                "tok_off"
-            ),
-            F.sum("ptok").over(w_all).alias("total_tokens"),
-            F.sum("pcnt").over(w_all).alias("vocab_total"),
-        )
-    )
-    w_local = Window.partitionBy("pid").orderBy(F.desc("cnt"), "tok")
-    ranked = ranged.join(F.broadcast(offsets), "pid").select(
+    ranked = prefix_scan(counts, [F.desc("cnt"), "tok"], sums=["cnt"]).select(
         "cnt",
-        (F.col("rank_off") + F.row_number().over(w_local))
-        .cast("int")
-        .alias("rank"),
-        (
-            F.col("tok_off")
-            + F.sum("cnt").over(
-                w_local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-        ).alias("cum_tokens"),
-        "total_tokens",
-        "vocab_total",
+        F.col("rank").cast("int").alias("rank"),
+        F.col("cum_cnt").alias("cum_tokens"),
+        F.col("tot_cnt").alias("total_tokens"),
+        F.col("n_total").alias("vocab_total"),
     )
     return (
         ranked.where(
@@ -1969,14 +1867,9 @@ def quality_rank_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shapes, sized for 100 TB: the three per-doc signals are one narrow
     scan pass, melted long (3 rows/doc). Each signal's global rank
-    uses the distributed prefix-sum tiling (orders_pareto_share /
-    vocab_coverage_curve), generalized to RESPECT A GROUP KEY: one
-    range-partition on (signal, value desc, doc_id), per-(signal, pid)
-    row counts, offsets via a bounded |signals|×|pids|-row window
-    broadcast back — so no signal ever funnels through a single window
-    task (a 3-partition ``Window.partitionBy(signal)`` would be
-    exactly the corpus-sized window the plan sweep forbids). The
-    pivot back to wide is one doc_id rollup.
+    comes from :func:`~duckdb_gsheets_spark.operators.windows.prefix_scan`
+    grouped by signal, so no signal funnels through a single window
+    task. The pivot back to wide is one doc_id rollup.
     """
     base = _doc_tokens(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
@@ -2003,37 +1896,9 @@ def quality_rank_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s"),
     ).select("doc_id", "s.signal", "s.value")
-    ranged = (
-        long.repartitionByRange("signal", F.desc("value"), "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_off = (
-        Window.partitionBy("signal")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        ranged.groupBy("signal", "pid")
-        .agg(F.count(F.lit(1)).alias("pcnt"))
-        .select(
-            "signal",
-            "pid",
-            F.coalesce(
-                F.sum("pcnt").over(w_off), F.lit(0).cast("long")
-            ).alias("rank_off"),
-        )
-    )
-    w_local = Window.partitionBy("signal", "pid").orderBy(
-        F.desc("value"), "doc_id"
-    )
-    ranked = ranged.join(F.broadcast(offsets), ["signal", "pid"]).select(
-        "doc_id",
-        "signal",
-        (F.col("rank_off") + F.row_number().over(w_local))
-        .cast("int")
-        .alias("rank"),
-    )
+    ranked = prefix_scan(
+        long, [F.desc("value"), "doc_id"], by=["signal"]
+    ).select("doc_id", "signal", F.col("rank").cast("int").alias("rank"))
     r = lambda s: F.max(  # noqa: E731 — one-use pivot shorthand
         F.when(F.col("signal") == s, F.col("rank"))
     )

@@ -23,6 +23,7 @@ from duckdb_gsheets_spark.operators.determinism import (
     oracle_dsum,
 )
 from duckdb_gsheets_spark.operators.registry import QueryDef
+from duckdb_gsheets_spark.operators.windows import prefix_scan
 from duckdb_gsheets_spark.plans.catalog import load_table
 
 EVENT_TYPES = ("click", "view", "purchase", "signup", "error")
@@ -2124,13 +2125,9 @@ def events_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrived (``running_max(ts) − ts``); the bucketed distribution says
     what share of data a 1-minute or 1-hour watermark would drop.
 
-    The running max over arrival order is a corpus-sized prefix scan —
-    a single unpartitioned window at 100 TB. It runs here as the
-    distributed prefix-scan tiling (third instance of the pattern,
-    generalized from SUM to MAX, which is equally associative):
-    range-partition by arrival id, per-partition running max in
-    parallel windows, then per-partition max offsets from a bounded
-    |pids|-row window broadcast back. Output is |buckets| rows.
+    The running max over arrival order is a corpus-sized prefix scan;
+    it runs as :func:`~duckdb_gsheets_spark.operators.windows.prefix_scan`
+    (MAX). Output is |buckets| rows.
 
     The generated test stream happens to arrive perfectly in order, so
     its honest audit is one all-``on_time`` row (max lateness 0); the
@@ -2145,37 +2142,8 @@ def events_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lateness_buckets(ev: DataFrame) -> DataFrame:
     """Bucketed lateness distribution of an ``(event_id, us)`` frame:
-    arrival order = event_id asc, lateness = running max(us) − us,
-    computed with the tiled distributed prefix-scan (MAX)."""
-    ranged = (
-        ev.repartitionByRange("event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_off = (
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        ranged.groupBy("pid")
-        .agg(F.max("us").alias("pmax"))
-        .select(
-            "pid",
-            F.max("pmax").over(w_off).alias("off_max"),  # NULL for pid 0
-        )
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    run = ranged.join(F.broadcast(offsets), "pid").select(
-        "us",
-        F.greatest(
-            F.max("us").over(w_local),
-            F.coalesce(F.col("off_max"), F.lit(-(2**62)).cast("long")),
-        ).alias("runmax"),
-    )
-    lateness = (F.col("runmax") - F.col("us")).alias("late_us")
+    arrival order = event_id asc, lateness = running max(us) − us."""
+    lateness = (F.col("cummax_us") - F.col("us")).alias("late_us")
     bucket = (
         F.when(F.col("late_us") == 0, "on_time")
         .when(F.col("late_us") <= LATENESS_MINUTE_US, "le_1m")
@@ -2183,7 +2151,8 @@ def lateness_buckets(ev: DataFrame) -> DataFrame:
         .otherwise("gt_1h")
     )
     return (
-        run.select(lateness)
+        prefix_scan(ev, ["event_id"], maxes=["us"])
+        .select(lateness)
         .select(bucket.alias("bucket"), "late_us")
         .groupBy("bucket")
         .agg(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from duckdb_gsheets_spark.functions import text as T
 from duckdb_gsheets_spark.operators.determinism import davg, oracle_davg
 from duckdb_gsheets_spark.operators.registry import QueryDef
+from duckdb_gsheets_spark.operators.windows import prefix_scan
 from duckdb_gsheets_spark.plans.catalog import load_table
 
 QUALITY_THRESHOLD = 0.5
@@ -629,9 +630,9 @@ def pipeline_ccnet_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     and tokens kept, keep rate.
 
     Shuffle ledger: the xent core's token explode + vocab agg
-    (broadcast back), ONE range-partition for the grouped prefix-sum
-    tercile rank (``curation.lang_tercile_ranked`` — no per-language
-    window funnel), then a |langs|×3-row rollup. The keep decision is
+    (broadcast back), ONE range-partition for the grouped
+    ``prefix_scan`` tercile rank (``curation.lang_tercile_ranked``),
+    then a |langs|×3-row rollup. The keep decision is
     a per-row hash compare fused into the scan of the ranked table —
     no extra shuffle, no collect; at 100 TB the corpus moves twice
     (explode agg, range partition), same as the standalone tertile
@@ -1705,11 +1706,9 @@ def pipeline_dsir_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the engines to disagree on.
 
     Shapes, sized for 100 TB: the weight core's ledger (three corpus
-    scans, bucket tables broadcast) plus ONE range partition for the
-    global rank via the distributed prefix-sum tiling
-    (orders_pareto_share) — per-pid counts, offsets from a bounded
-    |pids|-row window broadcast back; no single-task global window.
-    The final rollup is |langs| rows.
+    scans, bucket tables broadcast) plus the global rank from
+    :func:`~duckdb_gsheets_spark.operators.windows.prefix_scan`; no
+    single-task global window. The final rollup is |langs| rows.
     """
     from duckdb_gsheets_spark.functions import portable_hash as PH
     from duckdb_gsheets_spark.operators.curation import (
@@ -1730,48 +1729,12 @@ def pipeline_dsir_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log((-l1).cast("double") / F.lit(1e9)) * 1e9
     ).cast("long")
     keyed = cand.withColumn("gkey", F.col("w_scaled") - l2)
-    ranged = (
-        keyed.repartitionByRange(F.desc("gkey"), "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    # ONE bounded |pids|-row aggregate carries BOTH global-rank inputs
-    # — the per-partition prefix offsets AND the total candidate count
-    # (a full-frame window over the same tiny frame) — so the round-11
-    # shape's separate n_tot aggregate + second broadcast join fold
-    # into this single broadcast (part of the round-12 job-floor cut).
-    w_off = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w_all = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = (
-        ranged.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("pcnt"))
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("pcnt").over(w_off), F.lit(0).cast("long")
-            ).alias("rank_off"),
-            F.sum("pcnt").over(w_all).alias("n_cand"),
-        )
-    )
-    w_local = Window.partitionBy("pid").orderBy(
-        F.desc("gkey"), "doc_id"
-    )
-    kept = (
-        (F.col("rank_off") + F.row_number().over(w_local))
-        * DSIR_KEEP_DEN
-    ) <= F.col("n_cand") * DSIR_KEEP_NUM
-    flagged = (
-        ranged.join(F.broadcast(offsets), "pid")
-        .select(
-            "lang",
-            "n_tokens",
-            "w_scaled",
-            kept.cast("long").alias("kept"),
-        )
+    kept = F.col("rank") * DSIR_KEEP_DEN <= F.col("n_total") * DSIR_KEEP_NUM
+    flagged = prefix_scan(keyed, [F.desc("gkey"), "doc_id"]).select(
+        "lang",
+        "n_tokens",
+        "w_scaled",
+        kept.cast("long").alias("kept"),
     )
     n_sel = F.sum("kept")
     return flagged.groupBy("lang").agg(

@@ -24,6 +24,7 @@ from duckdb_gsheets_spark.operators.determinism import (
     oracle_dsum,
 )
 from duckdb_gsheets_spark.operators.registry import QueryDef
+from duckdb_gsheets_spark.operators.windows import prefix_scan
 from duckdb_gsheets_spark.plans.catalog import load_table
 
 
@@ -911,16 +912,12 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     share and cumulative share of total revenue — the "do 20% of
     customers drive 80% of revenue" audit.
 
-    Lifetime revenue in exact cents almost never ties, so a
-    value-level collapse buys nothing here (|distinct values| ≈
-    |customers|) — the global rank is computed with the DISTRIBUTED
-    PREFIX-SUM pattern instead: range-partition the value table
-    descending, cumulate within each partition (parallel windows),
-    and add per-partition offsets from a bounded |partitions|-row
-    collect. No single-task global window at any corpus size.
-    Revenue is exact scaled-long cents end to end with one rounded
-    division per reported ratio; the cumulative share is a final
-    window over the ≤10 decile rows.
+    The global cumulative customer count and both totals come from
+    :func:`~duckdb_gsheets_spark.operators.windows.prefix_scan` over
+    the per-revenue-value table, so no single-task window sees a
+    corpus-sized input. Revenue is exact scaled-long cents end to end
+    with one rounded division per reported ratio; the cumulative share
+    is a final window over the ≤10 decile rows.
     """
     orders = load_table(spark, sf_dir, "orders")
     cust = orders.groupBy("o_custkey").agg(
@@ -929,64 +926,19 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     vals = cust.groupBy("rev_c").agg(F.count(F.lit(1)).alias("cnt"))
-    totals = vals.agg(
-        F.sum("cnt").alias("n_total"),
-        F.sum(F.col("rev_c") * F.col("cnt")).alias("rev_total"),
+    scanned = prefix_scan(
+        vals.withColumn("rev", F.col("rev_c") * F.col("cnt")),
+        [F.desc("rev_c")],
+        sums=["cnt", "rev"],
     )
-    # Distributed prefix sum: pid is contiguous under range
-    # partitioning (pid 0 = highest revenues), so the global
-    # cumulative count = partition-local cumulative + Σ counts of
-    # earlier partitions. The value table is localCheckpoint'ed
-    # (eager) so the pid assignment materializes exactly once and
-    # both consumers (the per-partition offset aggregate and the
-    # ranked stream) read the same partitioning — range-sampling
-    # boundaries and AQE coalescing are NOT stable across separate
-    # materializations, so an unmaterialized two-action formulation
-    # can mis-tile at scale. Unlike persist(), the checkpoint blocks
-    # are ContextCleaner-freed once the frame goes out of scope, so
-    # repeated invocations in a long session (bench best-of-3, parity
-    # sweeps) don't accumulate executor storage. The offsets come
-    # from an in-plan |partitions|-row cumulative window broadcast
-    # back onto the stream. The materialized table is |distinct
-    # revenue|-sized — the same per-value table the computation
-    # needs anyway.
-    ranged = (
-        vals.repartitionByRange(F.desc("rev_c"))
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_off = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        ranged.groupBy("pid")
-        .agg(F.sum("cnt").alias("pcnt"))
-        .select(
-            "pid",
-            F.coalesce(F.sum("pcnt").over(w_off), F.lit(0).cast("long")).alias(
-                "offset"
-            ),
-        )
-    )
-    w_local = Window.partitionBy("pid").orderBy(F.desc("rev_c")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    tiled = (
-        ranged.join(F.broadcast(offsets), "pid")
-        .withColumn(
-            "n_before",
-            F.col("offset") + F.sum("cnt").over(w_local) - F.col("cnt"),
-        )
-        .join(F.broadcast(totals))
-        .withColumn(
-            "decile",
-            (F.lit(1) + F.expr("div(n_before * 10, n_total)")).cast("int"),
-        )
+    tiled = scanned.withColumn(
+        "decile",
+        (F.lit(1) + F.expr("div((cum_cnt - cnt) * 10, tot_cnt)")).cast("int"),
     )
     per_decile = tiled.groupBy("decile").agg(
         F.sum("cnt").alias("n_customers"),
-        F.sum(F.col("rev_c") * F.col("cnt")).alias("rev_c_sum"),
-        F.first("rev_total").alias("rev_total"),
+        F.sum("rev").alias("rev_c_sum"),
+        F.first("tot_rev").alias("rev_total"),
     )
     wd = Window.orderBy("decile").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -24,6 +24,87 @@ def _cents_sum_over(col, w):
     )
 
 
+def prefix_scan(df: DataFrame, order, by=(), sums=(), maxes=()) -> DataFrame:
+    """Distributed prefix scan: a global rank, running sums and running
+    maxes in ``order`` within each ``by`` group, with no single-task
+    window over the rows.
+
+    Returns ``df``'s columns plus ``rank`` (1-based within the group),
+    ``n_total`` (rows in the group), ``cum_<c>`` and ``tot_<c>`` (running
+    and group sum) for each column in ``sums``, and ``cummax_<c>``
+    (running max) for each column in ``maxes``. ``order`` must be a
+    total order within each group for the results to be deterministic.
+
+    Shape: range-partition on ``(*by, *order)``, so each group's rows
+    fill consecutive partitions in order, and tag every row with its
+    ``pid = spark_partition_id()``. One ``groupBy(*by, pid)`` table of
+    per-partition counts, sums and maxes (|groups| × |pids| rows) turns
+    into exclusive-prefix offsets and group totals by windows over pid,
+    and is broadcast back; each row's values are then a partition-local
+    window plus its partition's offset.
+
+    The tagged frame is eagerly localCheckpoint'ed, so the offsets
+    table and the rows read ONE pid assignment: range-partition
+    boundaries are sampled, and AQE may coalesce differently, on every
+    materialization, and two unmaterialized reads can tile differently.
+    Unlike persist(), the checkpoint blocks are ContextCleaner-freed
+    once the frame goes out of scope, so repeated calls in a long
+    session hold no executor storage.
+    """
+    cols = df.columns
+    ranged = (
+        df.repartitionByRange(*by, *order)
+        .withColumn("pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    w_pid = Window.partitionBy(*by).orderBy("pid")
+    w_off = w_pid.rowsBetween(Window.unboundedPreceding, -1)
+    w_grp = w_pid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    zero = F.lit(0).cast("long")
+    offsets = (
+        ranged.groupBy(*by, "pid")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            *(F.sum(c).alias(f"_s_{c}") for c in sums),
+            *(F.max(c).alias(f"_m_{c}") for c in maxes),
+        )
+        .select(
+            *by,
+            "pid",
+            F.coalesce(F.sum("_n").over(w_off), zero).alias("_off_n"),
+            F.sum("_n").over(w_grp).alias("n_total"),
+            *(
+                F.coalesce(F.sum(f"_s_{c}").over(w_off), zero).alias(f"_off_{c}")
+                for c in sums
+            ),
+            *(F.sum(f"_s_{c}").over(w_grp).alias(f"tot_{c}") for c in sums),
+            # NULL for a group's first pid; F.greatest skips it.
+            *(F.max(f"_m_{c}").over(w_off).alias(f"_offmax_{c}") for c in maxes),
+        )
+    )
+    w_local = (
+        Window.partitionBy(*by, "pid")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return ranged.join(F.broadcast(offsets), [*by, "pid"]).select(
+        *cols,
+        (F.col("_off_n") + F.row_number().over(w_local)).alias("rank"),
+        "n_total",
+        *(
+            (F.col(f"_off_{c}") + F.sum(c).over(w_local)).alias(f"cum_{c}")
+            for c in sums
+        ),
+        *(f"tot_{c}" for c in sums),
+        *(
+            F.greatest(F.max(c).over(w_local), F.col(f"_offmax_{c}")).alias(
+                f"cummax_{c}"
+            )
+            for c in maxes
+        ),
+    )
+
+
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number / rank / dense_rank per customer over order value."""
     orders = load_table(spark, sf_dir, "orders")
@@ -130,60 +211,23 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile(4) wealth quartiles over customers (unique total order).
 
     A literal ``ntile(4).over(Window.orderBy(...))`` funnels the whole
-    table through ONE task (Spark's `No Partition Defined` warning), so
-    the global rank is computed with the DISTRIBUTED PREFIX-SUM tiling
-    instead (same pattern as orders_pareto_share, tpch_extra.py):
-    range-partition descending (pid 0 = richest block), rank within
-    each partition in parallel windows, and add per-partition
-    row-count offsets from a bounded |partitions|-row window that is
-    broadcast back onto the stream. The ANSI NTILE size rule — with
+    table through ONE task, so the global rank comes from
+    :func:`prefix_scan`. The ANSI NTILE size rule — with
     ``n = q·4 + r``, the first ``r`` tiles get ``q+1`` rows — is then
-    pure integer arithmetic on the global rank, bit-identical to the
-    single-window formulation at any partition count and parallel at
-    any corpus size. The range-partitioned table is localCheckpoint'ed
-    (eager) so both consumers read ONE pid assignment — range-sampling
-    boundaries are not stable across separate materializations — and
-    the blocks are ContextCleaner-freed when the frame goes out of
-    scope (no session-lifetime cache pin).
+    pure integer arithmetic on that rank.
     """
-    customer = load_table(spark, sf_dir, "customer")
-    ranged = (
-        customer.select("c_custkey", "c_acctbal")
-        .repartitionByRange(F.desc("c_acctbal"), F.col("c_custkey"))
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    customer = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_acctbal"
     )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = (
-        ranged.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("pcnt"))
-        .select(
-            "pid",
-            F.coalesce(F.sum("pcnt").over(w_off), F.lit(0).cast("long")).alias(
-                "offset"
-            ),
-            F.sum("pcnt").over(w_all).alias("n_total"),
-        )
-    )
-    w_local = Window.partitionBy("pid").orderBy(
-        F.desc("c_acctbal"), "c_custkey"
-    )
-    return (
-        ranged.join(F.broadcast(offsets), "pid")
-        .withColumn("rn", F.col("offset") + F.row_number().over(w_local))
-        .select(
-            "c_custkey",
-            "c_acctbal",
-            F.expr(
-                "CAST(CASE WHEN rn <= (n_total % 4) * (n_total div 4 + 1) "
-                "THEN (rn - 1) div (n_total div 4 + 1) + 1 "
-                "ELSE (n_total % 4) + (rn - (n_total % 4) * (n_total div 4 + 1) - 1) "
-                "div (n_total div 4) + 1 END AS INT)"
-            ).alias("wealth_quartile"),
-        )
+    return prefix_scan(customer, [F.desc("c_acctbal"), "c_custkey"]).select(
+        "c_custkey",
+        "c_acctbal",
+        F.expr(
+            "CAST(CASE WHEN rank <= (n_total % 4) * (n_total div 4 + 1) "
+            "THEN (rank - 1) div (n_total div 4 + 1) + 1 "
+            "ELSE (n_total % 4) + (rank - (n_total % 4) * (n_total div 4 + 1) - 1) "
+            "div (n_total div 4) + 1 END AS INT)"
+        ).alias("wealth_quartile"),
     )
 
 

@@ -4769,38 +4769,41 @@ def test_events_anomaly_mad_matches_python(spark):
     assert expected, "fixture must contain MAD outliers"
 
 
-def test_prefix_sum_tiling_invariant_to_partition_count(spark):
-    """The distributed prefix-sum rewrites (window_ntile,
-    vocab_coverage_curve, orders_pareto_share) must produce IDENTICAL
+@pytest.mark.parametrize(
+    "name",
+    [
+        "window_ntile",
+        "orders_pareto_share",
+        "quality_lang_tertiles",
+        "pipeline_ccnet_corpus",
+        "vocab_coverage_curve",
+        "quality_rank_ensemble",
+        "events_lateness_audit",
+        "pipeline_dsir_corpus",
+    ],
+)
+def test_prefix_sum_tiling_invariant_to_partition_count(spark, name):
+    """Every ``windows.prefix_scan`` consumer must produce IDENTICAL
     results at any shuffle-partition count — the property that makes
     the pid-offset tiling a safe replacement for the single global
     window. Runs each at 1, 5 and 32 partitions (1 = the degenerate
-    all-in-one-tile case; 32 > |distinct pareto deciles|)."""
-    from duckdb_gsheets_spark.operators.curation import vocab_coverage_curve
-    from duckdb_gsheets_spark.operators.tpch_extra import orders_pareto_share
-    from duckdb_gsheets_spark.operators.windows import window_ntile
+    all-in-one-tile case; 32 > |distinct pareto deciles|), with AQE
+    partition coalescing off so the fixture's small tables really
+    spread over that many pids."""
+    from duckdb_gsheets_spark.operators import all_queries
+    from tests.test_aqe import _confs
 
-    original = spark.conf.get("spark.sql.shuffle.partitions")
+    build = all_queries()[name].spark_fn
     results = {}
-    try:
-        for n in ("1", "5", "32"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
-            results[n] = {
-                "ntile": sorted(
-                    map(tuple, window_ntile(spark, SF).collect())
-                ),
-                "coverage": sorted(
-                    map(tuple, vocab_coverage_curve(spark, SF).collect())
-                ),
-                "pareto": sorted(
-                    map(tuple, orders_pareto_share(spark, SF).collect())
-                ),
-            }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", original)
-    for key in ("ntile", "coverage", "pareto"):
-        assert results["1"][key] == results["5"][key] == results["32"][key], key
-        assert results["1"][key], key  # non-empty
+    for n in ("1", "5", "32"):
+        with _confs(
+            spark,
+            spark__sql__shuffle__partitions=n,
+            spark__sql__adaptive__coalescePartitions__enabled="false",
+        ):
+            results[n] = sorted(map(tuple, build(spark, SF).collect()))
+    assert results["1"] == results["5"] == results["32"]
+    assert results["1"]  # non-empty
 
 
 def test_doc_ngram_novelty_matches_python(spark):

@@ -841,16 +841,12 @@ def test_no_accidental_cartesian_across_entire_registry(spark):
     nested-loop broadcasts over a driver-bounded side."""
     from duckdb_gsheets_spark.operators import all_queries
 
-    # join_cross IS the cartesian coverage op; the recall report and
-    # the nprobe curve cross a 10-row query spine with a 3-row
-    # method/depth list.
+    # The recall report crosses a 10-row query spine with a 3-row
+    # method list. join_cross, the cartesian coverage op, broadcasts
+    # its small side and so plans as a BroadcastNestedLoopJoin.
     cartesian_ok = {
-        "join_cross",
         "ann_recall_report",
-        "ann_nprobe_recall_curve",
         "ann_ndcg_report",  # same |queries|×|methods| spine as the recall report
-        "ann_matryoshka_recall",  # same |queries|×|widths| audit spine
-        "ann_prefix_ivf_recall",  # same |queries|×|widths| audit spine
     }
     # Scalar-broadcast shapes: a crossJoin against a 1-row (or
     # driver-bounded) side plans as BroadcastNestedLoopJoin — bounded
@@ -863,19 +859,15 @@ def test_no_accidental_cartesian_across_entire_registry(spark):
         "ann_sq8_topk",             # same broadcast query batch × dequantized corpus
         "ann_sq8_recall",           # composes the cosine + SQ8 baselines
         "ann_sq8_rerank_topk",      # same broadcast query batch x corpus, then bounded rerank
-        "ann_sq8_rerank_recall",    # composes the cosine + SQ8 + rerank baselines
-        "embedding_neardup_pairs",  # broadcast-bounded LSH block pairs
         "ann_recall_report",        # composes the cosine baseline
         "ann_nprobe_recall_curve",  # same spine × depth cross + baseline
         "text_unigram_xent",        # 1-row corpus-total broadcast
-        "vocab_coverage_curve",     # 1-row token-total broadcast
         "corpus_mix_weights",       # 1-row normalization broadcast
         "bm25_search",              # 1-row avgdl broadcast
         "quality_deciles",          # 1-row count broadcast
         "corpus_resample",          # 1-row total broadcast
         "pipeline_curated_corpus",  # composes resample's total broadcast
         "orders_rfm_segments",      # 1-row quintile-threshold broadcast
-        "orders_pareto_share",      # 1-row totals broadcast
         "text_pmi_collocations",    # 1-row N / M totals broadcast
         "text_tfidf_top_terms",     # 1-row doc-count broadcast
         "skew_salted_join",         # salt-replication range broadcast
@@ -894,9 +886,7 @@ def test_no_accidental_cartesian_across_entire_registry(spark):
         "ann_ivf_balance_report",   # 1-row total broadcast
         "pipeline_doremi_weights",  # 1-row exp-sum broadcast over the |domains|-row local relation
         "pipeline_classifier_corpus",  # 1-row class-count broadcast (sampling threshold)
-        "pipeline_classifier_gate",  # composes the corpus's 1-row class-count broadcast (probe fit)
         "rollup_incremental_refresh",  # 1-row max-hour broadcast
-        "ann_mmr_rerank",           # 1-query broadcast + ≤MMR_POOL² pool sims
         "contrastive_negatives",    # 1-row max-id broadcast
         "privacy_k_anonymity",      # 1-row total-groups broadcast
         "neardup_graph_stats",      # three 1-row aggregate cross joins
@@ -904,8 +894,6 @@ def test_no_accidental_cartesian_across_entire_registry(spark):
         "embedding_isotropy",       # two 1-row aggregate cross joins
         "ann_matryoshka_recall",    # composes the cosine baseline's query broadcast
         "ann_prefix_ivf_recall",    # composes the cosine baseline's query broadcast
-        "dsir_importance_weights",  # 1-row bucket-LM totals broadcast
-        "pipeline_dsir_corpus",     # composes the totals broadcast + 1-row n_cand
         "quality_score_calibration",  # 1-row n_total broadcast (deciles recipe)
         "events_ab_test",           # two 1-row per-arm stat sides
         "events_power_analysis",    # same two 1-row per-arm stat sides
@@ -927,21 +915,32 @@ def test_no_accidental_cartesian_across_entire_registry(spark):
         if bad:
             offenders[name] = bad
     assert not offenders, f"unexpected unbounded joins: {offenders}"
+    # Both allowlists must stay minimal: every listed name still plans
+    # the join it is listed for (drop stale entries).
+    plans = _registry_plans(spark)
+    stale = [
+        (n, node)
+        for allow, node in (
+            (cartesian_ok, "CartesianProduct"),
+            (bnlj_ok, "BroadcastNestedLoopJoin"),
+        )
+        for n in allow
+        if n in plans and node not in plans[n]
+    ]
+    assert not stale, f"allowlist entries no longer needed: {stale}"
 
 
 def test_no_unpartitioned_corpus_window_across_entire_registry(spark):
     """Sweep EVERY registered query's physical plan: no Window node
     with an empty partition spec (the single-task shape WindowExec
     warns about) outside the explicit allowlist of provably-bounded
-    inputs. Corpus-sized global ranks/cumulates must use the
-    distributed prefix-sum tiling (orders_pareto_share, window_ntile,
-    vocab_coverage_curve) instead — this gate keeps the pattern from
+    inputs. Corpus-sized global ranks/cumulates must use
+    ``windows.prefix_scan`` instead — this gate keeps the pattern from
     reappearing in new operators."""
     # Every allowlisted query's unpartitioned window runs over an
     # input bounded INDEPENDENT of corpus size:
-    #   * pid-offset tables of the prefix-sum tiling: |shuffle
-    #     partitions| rows (orders_pareto_share, window_ntile,
-    #     vocab_coverage_curve);
+    #   * pid-offset tables of ``windows.prefix_scan`` without a
+    #     ``by`` key: |shuffle partitions| rows;
     #   * fixed-K result spines: pareto deciles (≤10), passage top-50,
     #     RFM quintile score maps (≤5 distinct-value groups per
     #     dimension after the value collapse — recency dates /
@@ -956,9 +955,9 @@ def test_no_unpartitioned_corpus_window_across_entire_registry(spark):
     #   * fixed-batch spines: vocab_growth_curve cumulates over
     #     ≤N_GROWTH_BATCHES rows.
     bounded_ok = {
-        "orders_pareto_share",
-        "window_ntile",
-        "vocab_coverage_curve",
+        "orders_pareto_share",  # pid-offset table of prefix_scan; ≤10 deciles
+        "window_ntile",  # pid-offset table of prefix_scan
+        "vocab_coverage_curve",  # pid-offset table of prefix_scan
         "duplicate_passages",
         "orders_rfm_segments",
         "quality_deciles",
@@ -967,9 +966,9 @@ def test_no_unpartitioned_corpus_window_across_entire_registry(spark):
         "vocab_growth_curve",
         "skew_heavy_hitters",  # ranks the post-LIMIT ≤HH_K winner table
         "token_budget_waterfill",  # waterfills the |sources|-row inventory
-        "events_lateness_audit",  # pid-offset table of the prefix-scan tiling
+        "events_lateness_audit",  # pid-offset table of prefix_scan
         "minhash_auc_report",  # cumulates the ≤PERMS+1-row estimate grid
-        "pipeline_dsir_corpus",  # pid-offset table of the prefix-sum tiling
+        "pipeline_dsir_corpus",  # pid-offset table of prefix_scan
         "quality_score_calibration",  # cumulates the ≤1e6-value score grid
         # The LRS family's |pids|-row boundary-seam lag windows are
         # sealed behind the round-14 candidate checkpoint (the
@@ -1625,6 +1624,33 @@ def test_whitespace_split_lives_only_in_functions_text():
     ]
     assert any(s.startswith("functions/text.py:") for s in sites)
     assert [s for s in sites if not s.startswith("functions/text.py:")] == []
+
+
+def test_partition_id_lives_only_in_prefix_scan():
+    """One distributed prefix scan: ``spark_partition_id`` may be called
+    only by ``windows.prefix_scan`` and the LRS suffix spine (whose
+    boundary-seam ``lag`` is a different algorithm), so no builder
+    hand-copies the pid-offset tiling."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "duckdb_gsheets_spark"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            sites += [
+                f"{path.relative_to(pkg).as_posix()}:{fn.name}"
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Call)
+                and getattr(node.func, "attr", getattr(node.func, "id", None))
+                == "spark_partition_id"
+            ]
+    assert sorted(sites) == [
+        "operators/dedup.py:_lrs_suffix_from_toks",
+        "operators/windows.py:prefix_scan",
+    ]
 
 
 @pytest.mark.parametrize(

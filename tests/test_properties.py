@@ -376,3 +376,74 @@ def test_ppjoin_cores_match_brute_force(spark, case):
     want_jac = _brute_force_pairs(sets, lambda a, b: len(a & b) / len(a | b), t)
     assert jac == {(i, j) for i, j in want_jac if i < j}
     assert con == _brute_force_pairs(sets, lambda a, b: len(a & b) / len(a), t)
+
+
+@st.composite
+def _scan_case(draw):
+    """A ``prefix_scan`` input: 0-3 ``by`` columns over ≤3 group values,
+    a repeating order value ``o`` with the unique tiebreak ``k``, sums
+    ``s`` that repeat and maxes ``m`` that may all be negative, spread
+    over 1-8 input partitions and 1-32 range partitions."""
+    n_by = draw(st.integers(0, 3))
+    g = st.integers(0, draw(st.integers(0, 2)))
+    m = st.one_of(st.integers(-(10**12), -1), st.integers(-5, 5))
+    rows = draw(
+        st.lists(
+            st.tuples(g, g, g, st.integers(0, 3), st.integers(-2, 2), m),
+            max_size=40,
+        )
+    )
+    frame = [(g1, g2, g3, o, k, s, mm) for k, (g1, g2, g3, o, s, mm) in enumerate(rows)]
+    return n_by, frame, draw(st.integers(1, 8)), draw(st.sampled_from([1, 3, 8, 32]))
+
+
+def _py_prefix_scan(frame, n_by):
+    """Sort-and-scan reference: ``k -> (rank, n_total, cum_s, tot_s,
+    cummax_m)`` in (o desc, k) order within each ``by`` group."""
+    groups = {}
+    for row in frame:
+        groups.setdefault(row[:n_by], []).append(row)
+    want = {}
+    for rows in groups.values():
+        rows.sort(key=lambda r: (-r[3], r[4]))
+        tot, cum, mx = sum(r[5] for r in rows), 0, None
+        for rank, (*_, k, s, m) in enumerate(rows, 1):
+            cum += s
+            mx = m if mx is None else max(mx, m)
+            want[k] = (rank, len(rows), cum, tot, mx)
+    return want
+
+
+@settings(max_examples=20, deadline=None)
+@example(case=(0, [], 1, 8))
+@example(case=(1, [(0, 0, 0, 1, 0, 2, -7), (0, 0, 0, 1, 1, 2, -9)], 8, 32))
+@given(case=_scan_case())
+def test_prefix_scan_matches_sort_and_scan(spark, case):
+    """``windows.prefix_scan`` equals a Python sort-and-scan: rank,
+    group size, running and total sums, running max — on empty frames,
+    groups spread over several pids and more partitions than rows."""
+    from pyspark.sql import functions as F
+
+    from duckdb_gsheets_spark.operators.windows import prefix_scan
+    from tests.test_aqe import _confs
+
+    n_by, frame, n_in, n_range = case
+    cols = ["g1", "g2", "g3", "o", "k", "s", "m"]
+    df = spark.createDataFrame(
+        frame, "g1 int, g2 int, g3 int, o int, k int, s long, m long"
+    ).repartition(n_in)
+    # AQE would coalesce a tiny frame's range partitions into one pid;
+    # off, every group spans as many pids as the sampled bounds give.
+    with _confs(
+        spark,
+        spark__sql__shuffle__partitions=str(n_range),
+        spark__sql__adaptive__coalescePartitions__enabled="false",
+    ):
+        out = prefix_scan(
+            df, [F.desc("o"), "k"], by=cols[:n_by], sums=["s"], maxes=["m"]
+        )
+        rows = out.collect()
+    assert out.columns == [*cols, "rank", "n_total", "cum_s", "tot_s", "cummax_m"]
+    got = {r.k: (r.rank, r.n_total, r.cum_s, r.tot_s, r.cummax_m) for r in rows}
+    assert len(rows) == len(frame)
+    assert got == _py_prefix_scan(frame, n_by)
